@@ -59,10 +59,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from fourmc_spark.format import core
+from fourmc_spark.format import core, sidecar
 from fourmc_spark.format.reader import iter_block_payloads, scan_file_info
 from fourmc_spark.format.writer import FourMcWriter, normalize_codec
-from fourmc_spark.sources.datasource import _list_files, _load_zone_sidecar
+from fourmc_spark.sources.datasource import _list_files
 
 __all__ = [
     "analyze_stats",
@@ -107,9 +107,7 @@ def sidecar_health(path: str) -> dict:
     operator needs to decide when to re-ANALYZE (or whether write-time
     ``statsschema``/``bloomcolumns`` is doing its job). Metadata-only:
     one os.stat + one small JSON read per file, no data bytes."""
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    files = [p for p in _list_files(path) if not p.endswith(STATS_SUFFIX)]
+    files = _list_files(path)
     out = {
         "n_files": len(files),
         "with_sidecar": 0,
@@ -127,11 +125,11 @@ def sidecar_health(path: str) -> dict:
         "orphan_sidecars": 0 if os.path.isdir(path) else None,
     }
     for f in files:
-        if not os.path.exists(f + STATS_SUFFIX):
+        if not os.path.exists(sidecar.path_for(f)):
             out["missing"] += 1
             continue
         # ONE validity contract: exactly what the planner would load
-        meta = _load_zone_sidecar(f)
+        meta = sidecar.load(f)
         if meta is None:
             out["stale"] += 1
             continue
@@ -156,8 +154,8 @@ def sidecar_health(path: str) -> dict:
                 x for x in dirs if not x.startswith((".", "_"))
             ]
             for n in names:
-                if n.endswith(STATS_SUFFIX) and not os.path.exists(
-                    os.path.join(dirpath, n[: -len(STATS_SUFFIX)])
+                if n.endswith(sidecar.STATS_SUFFIX) and not os.path.exists(
+                    os.path.join(dirpath, n[: -len(sidecar.STATS_SUFFIX)])
                 ):
                     out["orphan_sidecars"] += 1
     out["zone_columns"] = sorted(out["zone_columns"])
@@ -351,8 +349,8 @@ def compact_group(
     ``carry_stats=True`` forwards analyze_stats zone maps WITHOUT
     re-analyzing: raw-copied blocks keep their per-block min/max (the
     entries remap from input to output offsets), and the file tier
-    merges the inputs' file stats. Two conservativeness rules for the
-    TEXT record model:
+    merges the inputs' (the carry rule in format/sidecar.py). Two
+    conservativeness rules for the TEXT record model:
 
     * carried only when EVERY input has a valid (size-matching)
       sidecar — otherwise the output gets none;
@@ -375,7 +373,7 @@ def compact_group(
     blocks = 0
     fixes = 0
     metas = (
-        {src: _load_zone_sidecar(src) for src in plan.inputs}
+        {src: sidecar.load(src) for src in plan.inputs}
         if carry_stats else {}
     )
     carry = bool(metas) and all(m is not None for m in metas.values())
@@ -426,14 +424,15 @@ def compact_group(
         out_f.write(core.encode_footer(magic, offsets))
     os.replace(tmp, out_path)
     if carry:
-        _write_carried_sidecar(
+        sidecar.merge(
             out_path,
             [metas[s] for s in plan.inputs],
             block_entries,
             bloom_block_entries,
         )
     else:
-        _drop_stale_sidecar(out_path)
+        # a rerun into the same out_dir reuses the compact-NNNNNN names
+        sidecar.evict(out_path)
     return {
         "out": out_path,
         "inputs": len(plan.inputs),
@@ -442,160 +441,6 @@ def compact_group(
         "stats_carried": carry,
         "bytes": os.path.getsize(out_path),
     }
-
-
-def _or_bit_positions(bm, positions) -> None:
-    """OR bit ``positions`` into little-bit-order bitmap ``bm`` in place.
-
-    The ONE definition of the within-byte bit layout shared by the
-    partial-bitmap encoder and the sparse-wire decoder in
-    :func:`analyze_bloom` (and matched by the ``unpackbits``
-    ``bitorder="little"`` extraction): byte ``p >> 3``, bit ``p & 7``.
-    Encoder and decoder drifting apart here would silently corrupt
-    every merged bloom sidecar, so neither site may inline its own
-    copy."""
-    import numpy as np
-
-    np.bitwise_or.at(
-        bm, positions >> 3, np.left_shift(1, positions & 7).astype(np.uint8)
-    )
-
-
-def _drop_stale_sidecar(out_path: str) -> None:
-    """A rerun into the same out_dir writes deterministic compact-NNNNNN
-    names: when the new output carries no stats, a sidecar left by an
-    earlier run must not survive next to it — the size check alone
-    could accept it if the byte sizes happen to collide."""
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    try:
-        os.remove(out_path + STATS_SUFFIX)
-    except OSError:
-        pass
-
-
-def _write_carried_sidecar(
-    out_path: str,
-    metas: list[dict],
-    block_entries: list[dict],
-    bloom_block_entries: list[dict] | None = None,
-) -> None:
-    """Merge the inputs' file-tier stats and attach the remapped block
-    entries. A column enters the merged file tier only when EVERY input
-    records it (a gap would make the merged range too narrow). Block
-    BLOOM entries carry only when every input's ``bloom_blocks`` header
-    (algo/seed/bits/k/fam) is identical — a geometry or family mismatch
-    would probe one input's bitmaps under another's derivation."""
-    import json as _json
-
-    from fourmc_spark.sources.datasource import _zone_comparable
-
-    common = set(metas[0].get("columns", {}))
-    for m in metas[1:]:
-        common &= set(m.get("columns", {}))
-    file_cols = {}
-    for c in sorted(common):
-        stats = [m["columns"][c] for m in metas]
-        mns = [s.get("min") for s in stats if s.get("min") is not None]
-        mxs = [s.get("max") for s in stats if s.get("max") is not None]
-        vals = mns + mxs
-        if any(not _zone_comparable(vals[0], v) for v in vals[1:]):
-            # inputs analyzed under different DDLs for this column:
-            # min()/max() across mixed types would raise, and even a
-            # successful mix could understate the range — skip it
-            # (conservative: the column never file-prunes)
-            continue
-        file_cols[c] = {
-            "min": _zone_min(mns),
-            "max": _zone_max(mxs),
-            "nulls": sum(int(s.get("nulls") or 0) for s in stats),
-        }
-    meta = {
-        "version": 2,
-        "size": os.path.getsize(out_path),
-        "rows": sum(int(m.get("rows") or 0) for m in metas),
-        "columns": file_cols,
-        "blocks": block_entries,
-        "carried": True,
-    }
-    blooms = _merge_carried_blooms(metas)
-    if blooms:
-        meta["bloom"] = blooms
-    if bloom_block_entries:
-        heads = [m.get("bloom_blocks") for m in metas]
-        head = heads[0]
-        keys = ("algo", "seed", "bits", "k", "fam")
-        if (
-            isinstance(head, dict)
-            # every header field PRESENT (a vacuous None == None match
-            # must not reach the seal below and KeyError the task)
-            and all(f in head for f in keys)
-            and all(
-                isinstance(h, dict)
-                and all(h.get(f) == head.get(f) for f in keys)
-                for h in heads
-            )
-        ):
-            meta["bloom_blocks"] = dict(
-                {f: head[f] for f in keys}, blocks=bloom_block_entries
-            )
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-    tmp = out_path + STATS_SUFFIX + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    os.replace(tmp, out_path + STATS_SUFFIX)
-
-
-def _merge_carried_blooms(metas: list[dict]) -> dict:
-    """Bloom carry across compaction: the output file's value set is the
-    UNION of its inputs', and a bloom of a union is the bitwise OR of
-    the blooms — exact, no re-hash. A column carries only when EVERY
-    input has a bloom for it under the IDENTICAL contract (algo, seed,
-    bits, k, bitmap length); any gap or mismatch drops that column
-    (conservative: it simply never bloom-prunes). Seam-block text
-    ownership shifts are irrelevant here — the OR covers every input
-    row, and extra coverage only adds false positives, never false
-    absence."""
-    import base64 as _b64
-
-    all_blooms = [m.get("bloom") for m in metas]
-    if not all(isinstance(b, dict) for b in all_blooms):
-        common = set()
-    else:
-        common = set(all_blooms[0])
-        for b in all_blooms[1:]:
-            common &= set(b)
-    merged = {}
-    for c in sorted(common):
-        specs = [b[c] for b in all_blooms]
-        head = specs[0]
-        if not all(
-            isinstance(s, dict)
-            and s.get("algo") == head.get("algo")
-            and s.get("seed") == head.get("seed")
-            and s.get("bits") == head.get("bits")
-            and s.get("k") == head.get("k")
-            and s.get("fam") == head.get("fam")
-            for s in specs
-        ):
-            continue
-        try:
-            bms = [_b64.b64decode(s["b64"], validate=True) for s in specs]
-        except (KeyError, TypeError, ValueError):
-            continue
-        if any(len(bm) != len(bms[0]) for bm in bms):
-            continue
-        acc = 0  # big-int OR: C-speed regardless of bitmap size
-        for bm in bms:
-            acc |= int.from_bytes(bm, "little")
-        merged[c] = dict(
-            head,
-            b64=_b64.b64encode(
-                acc.to_bytes(len(bms[0]), "little")
-            ).decode("ascii"),
-        )
-    return merged
 
 
 def _recompress_group(
@@ -626,7 +471,7 @@ def _recompress_group(
                 fixes += 1
         w.close()
     os.replace(tmp, out_path)
-    _drop_stale_sidecar(out_path)  # recompression invalidates zone maps
+    sidecar.evict(out_path)  # recompression invalidates block stats
     return {
         "out": out_path,
         "inputs": len(plan.inputs),
@@ -751,14 +596,11 @@ def analyze_stats_proto(
     rule the proto split reader enforces), so point probes inside kept
     files scan only the blocks that may hold the value.
 
-    The block key is the compressed offset of the block in which each
-    EB record's sync marker starts — exactly the ownership rule the
-    proto split reader enforces (format/protobuf.py:
-    iter_eb_records_for_split), so dropping a block removes precisely
-    the records its stats speak for. bool/bytes/repeated fields are
-    skipped (no shared ordering with the JSON sidecar primitives);
-    float/double spans containing NaN record max=NaN (Spark orders NaN
-    above every double — such spans never prune, conservatively).
+    Block keys, values and the NaN rule follow the sidecar spec
+    (format/sidecar.py); the owner block is the one the proto split
+    reader assigns (format/protobuf.py: iter_eb_records_for_split).
+    bool/bytes/repeated fields are skipped (no shared ordering with the
+    JSON sidecar primitives).
 
     100 TB shape: files at or under ``split_bytes`` are one task each,
     footer read EXECUTOR-side (the driver pays no per-file pread — a
@@ -770,13 +612,9 @@ def analyze_stats_proto(
     reduceByKey (block keys are disjoint across ranges by the
     ownership rule) and the reducer task writes the sidecar; the
     driver sees one summary row per file."""
-    import json as _json
-    import math
-
     from fourmc_spark.format.protobuf import (
         USER_SCHEMA, bloom_eligible_fields, zone_eligible_fields,
     )
-    from fourmc_spark.sources.datasource import STATS_SUFFIX, _list_files
 
     schema = tuple(fields) if fields else USER_SCHEMA
     eligible = zone_eligible_fields(schema)
@@ -785,8 +623,10 @@ def analyze_stats_proto(
         raise ValueError(
             "analyze_stats_proto: no scalar orderable fields to analyze"
         )
-    floats = {
-        f.name for f in schema if f.type in ("double", "float")
+    arrow_types = {
+        f.name: {"string": "string", "double": "float64",
+                 "float": "float64"}.get(f.type, "int64")
+        for f in schema if f.name in cols
     }
     unknown = [c for c in (columns or ()) if c not in eligible]
     if unknown:
@@ -802,11 +642,11 @@ def analyze_stats_proto(
             "analyze_stats_proto: bloom_block_bits requires bloom_columns"
         )
     if bl_cols:
-        from fourmc_spark.sources.datasource import validate_bloom_geometry
-
-        validate_bloom_geometry(bloom_bits, bloom_k, "analyze_stats_proto")
+        sidecar.validate_bloom_geometry(
+            bloom_bits, bloom_k, "analyze_stats_proto"
+        )
         if bloom_block_bits is not None:
-            validate_bloom_geometry(
+            sidecar.validate_bloom_geometry(
                 bloom_block_bits, bk, "analyze_stats_proto (block tier)",
                 max_bits=1 << 24,
             )
@@ -818,74 +658,61 @@ def analyze_stats_proto(
                     " (scalar int32/int64/string only)"
                 )
             bl_fams[c] = bl_eligible[c]
-    files = [
-        p for p in _list_files(path)
-        if p.endswith((".4mc", ".4mz")) and not p.endswith(STATS_SUFFIX)
-    ]
+    files = [p for p in _list_files(path) if p.endswith((".4mc", ".4mz"))]
     if not files:
         return {"files": 0, "rows": 0, "columns": cols,
                 "block_stats": blocks}
     want_blocks = blocks
 
     def _range_stats(task) -> tuple:
-        """(file, (per-block stats, bloom position sets)) for one
-        block-aligned range — per-block ownership is the marker-start
-        block, so ranges never share a block key; bloom sets union
-        exactly across ranges."""
-        fpath, codec, start, end = task
+        """(file, (per-block zone spans, bloom position sets, per-block
+        bloom position sets)) for one block-aligned range. Ownership is
+        the marker-start block, so ranges never share a block key; bloom
+        sets union exactly across ranges."""
+        from itertools import groupby
 
-        from fourmc_spark.format.native import xxh64
+        import pyarrow as pa
+
         from fourmc_spark.format.protobuf import iter_eb_records_for_split
-        from fourmc_spark.sources.datasource import BLOOM_SEED, bloom_positions
 
+        fpath, codec, start, end = task
         if codec is None:  # whole file: resolve the footer executor-side
             from fourmc_spark.format.reader import scan_file_info
 
             codec, end, _offs = scan_file_info(fpath)
-        per_block: dict[int, dict] = {}
+        spans: dict[int, sidecar.Span] = {}
         bl: dict[str, set] = {c: set() for c in bl_cols}
         bl_blocks: dict[int, dict[str, set]] = {}
-        if start >= end:
-            return fpath, (per_block, bl, bl_blocks)
-        with open(fpath, "rb") as f:
-            for owner, rec in iter_eb_records_for_split(
-                f, codec, start, end, schema
-            ):
-                b = per_block.get(owner)
-                if b is None:
-                    b = per_block[owner] = {
-                        "rows": 0,
-                        "c": {c: [None, None, 0, False] for c in cols},
-                    }
+
+        if start < end:
+            with open(fpath, "rb") as f:
+                for owner, grp in groupby(
+                    iter_eb_records_for_split(f, codec, start, end, schema),
+                    key=lambda t: t[0],
+                ):
+                    recs = [rec for _o, rec in grp]
+                    # one owner block's records become Arrow columns
+                    spans.setdefault(owner, sidecar.Span(cols)).add(
+                        {c: pa.array([r.get(c) for r in recs], arrow_types[c])
+                         for c in cols},
+                        len(recs),
+                    )
                     if bloom_block_bits is not None:
-                        bl_blocks[owner] = {c: set() for c in bl_cols}
-                b["rows"] += 1
-                for c in cols:
-                    v = rec.get(c)
-                    st = b["c"][c]
-                    if v is None:
-                        st[2] += 1
-                        continue
-                    if c in floats:
-                        v = float(v)
-                        if math.isnan(v):
-                            st[3] = True
-                            continue
-                    if st[0] is None or v < st[0]:
-                        st[0] = v
-                    if st[1] is None or v > st[1]:
-                        st[1] = v
-                for c in bl_cols:
-                    v = rec.get(c)
-                    if v is None:
-                        continue
-                    h = xxh64(str(v).encode("utf-8"), BLOOM_SEED)
-                    bl[c].update(bloom_positions(h, bloom_k, bloom_bits))
-                    if bloom_block_bits is not None:
-                        bl_blocks[owner][c].update(
-                            bloom_positions(h, bk, bloom_block_bits)
+                        blk = bl_blocks.setdefault(
+                            owner, {c: set() for c in bl_cols}
                         )
-        return fpath, (per_block, bl, bl_blocks)
+                    for c in bl_cols:
+                        for text in {
+                            str(r[c]) for r in recs if r.get(c) is not None
+                        }:
+                            bl[c].update(sidecar.text_positions(
+                                text, bloom_k, bloom_bits
+                            ))
+                            if bloom_block_bits is not None:
+                                blk[c].update(sidecar.text_positions(
+                                    text, bk, bloom_block_bits
+                                ))
+        return fpath, (spans, bl, bl_blocks)
 
     def _merge_pb(a: tuple, b: tuple) -> tuple:
         a[0].update(b[0])  # block keys disjoint across ranges
@@ -895,90 +722,41 @@ def analyze_stats_proto(
         return a
 
     def _finalize(kv) -> dict:
-        fpath, (per_block, bl, bl_blocks) = kv
-        import os as _os
-
-        def _mnmx(st):
-            mn, mx = st[0], st[1]
-            if st[3]:  # NaN present: Spark's greatest double
-                mx = float("nan")
-                if mn is None:
-                    mn = float("nan")
-            return mn, mx
-
-        file_cols = {}
-        for c in cols:
-            mns, mxs, nulls = [], [], 0
-            for b in per_block.values():
-                mn, mx = _mnmx(b["c"][c])
-                if mn is not None:
-                    mns.append(mn)
-                if mx is not None:
-                    mxs.append(mx)
-                nulls += b["c"][c][2]
-            file_cols[c] = {
-                "min": _zone_min(mns), "max": _zone_max(mxs),
-                "nulls": nulls,
-            }
-        rows = sum(b["rows"] for b in per_block.values())
-        meta = {
-            "version": 2,
-            "size": _os.path.getsize(fpath),
-            "rows": rows,
-            "columns": file_cols,
-        }
-        if bl_cols:
-            import base64 as _b64
-
-            from fourmc_spark.sources.datasource import (
-                seal_bloom_blocks_header, seal_bloom_spec,
+        fpath, (spans, bl, bl_blocks) = kv
+        file_span = sidecar.Span(cols)
+        for o in sorted(spans):
+            file_span.merge(spans[o])
+        bloom_blocks = None
+        if bloom_block_bits is not None:
+            bloom_blocks = sidecar.seal_bloom_blocks_header(
+                bloom_block_bits, bk, bl_fams,
+                [
+                    {"o": o, "c": {
+                        c: sidecar.b64(sidecar.pack_bits(
+                            bl_blocks[o][c], bloom_block_bits
+                        ))
+                        for c in bl_cols
+                    }}
+                    for o in sorted(bl_blocks)
+                ],
             )
-
-            def _bitset(positions, n_bits: int) -> bytes:
-                bm = bytearray(n_bits // 8)
-                for p in positions:
-                    bm[p >> 3] |= 1 << (p & 7)
-                return bytes(bm)
-
-            meta["bloom"] = {
-                c: seal_bloom_spec(
-                    _bitset(bl[c], bloom_bits), bloom_bits, bloom_k,
-                    bl_fams[c],
+        sidecar.write(
+            fpath,
+            rows=file_span.rows,
+            columns=file_span.columns(),
+            blocks=[spans[o].block(o) for o in sorted(spans)]
+            if want_blocks else None,
+            bloom={
+                c: sidecar.seal_bloom_spec(
+                    sidecar.pack_bits(bl[c], bloom_bits), bloom_bits,
+                    bloom_k, bl_fams[c],
                 )
                 for c in bl_cols
-            }
-            if bloom_block_bits is not None:
-                entries = [
-                    {
-                        "o": o,
-                        "c": {
-                            c: _b64.b64encode(
-                                _bitset(bl_blocks[o][c], bloom_block_bits)
-                            ).decode("ascii")
-                            for c in bl_cols
-                        },
-                    }
-                    for o in sorted(bl_blocks)
-                ]
-                meta["bloom_blocks"] = seal_bloom_blocks_header(
-                    bloom_block_bits, bk, bl_fams, entries
-                )
-        if want_blocks:
-            meta["blocks"] = [
-                {
-                    "o": o,
-                    "c": {
-                        c: list(_mnmx(b["c"][c])) + [b["c"][c][2]]
-                        for c in cols
-                    },
-                }
-                for o, b in sorted(per_block.items())
-            ]
-        tmp = fpath + STATS_SUFFIX + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        _os.replace(tmp, fpath + STATS_SUFFIX)
-        return {"file": fpath, "rows": rows, "n_blocks": len(per_block)}
+            },
+            bloom_blocks=bloom_blocks,
+        )
+        return {"file": fpath, "rows": file_span.rows,
+                "n_blocks": len(spans)}
 
     # plan tasks: files at or under split_bytes (the common sealed-log
     # case) are one whole-file task each whose footer is read
@@ -1022,51 +800,6 @@ def analyze_stats_proto(
         "bloom_columns": bl_cols,
         "tasks": len(tasks),
     }
-
-
-def _zone_min(vals):
-    """min over stat values with Spark's NaN ordering (NaN greatest):
-    NaN contributes to min only when EVERY value is NaN. Python's bare
-    min/max are order-dependent with NaN ([nan,1]→nan but [1,nan]→1),
-    which could record a max below a real NaN row — a conservativeness
-    violation for x >= k predicates."""
-    import math
-
-    if not vals:
-        return None
-    real = [v for v in vals
-            if not (isinstance(v, float) and math.isnan(v))]
-    return min(real) if real else float("nan")
-
-
-def _zone_max(vals):
-    """max over stat values with Spark's NaN ordering (NaN greatest)."""
-    import math
-
-    if not vals:
-        return None
-    if any(isinstance(v, float) and math.isnan(v) for v in vals):
-        return float("nan")
-    return max(vals)
-
-
-def _json_stat_value(v):
-    import datetime
-    import decimal
-
-    import pandas as pd
-
-    if v is None:
-        return None
-    if not isinstance(v, (str, bytes, list, dict)) and pd.isna(v):
-        return None  # NaN/NaT from an all-null span
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat(sep=" ") if hasattr(v, "hour") else v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if type(v).__module__ == "numpy":
-        return v.item()
-    return v
 
 
 def _analyze_src(
@@ -1131,21 +864,18 @@ def analyze_stats(
     the scan's ``offset`` column already exposes, so block stats group
     lines exactly by the ownership rule the split reader enforces.
 
-    Safety: sidecars record the data file's byte size; the reader
-    ignores a sidecar whose size mismatches (stale after rewrite), and
-    Spark re-applies every filter post-scan, so pruning can only remove
+    Safety: a stale sidecar is ignored (format/sidecar.py), and Spark
+    re-applies every filter post-scan, so pruning can only remove
     provably-empty work. 100 TB shape: stats aggregate distributed
     (one shuffle keyed by (file, block)); sidecars are WRITTEN
     EXECUTOR-SIDE (applyInPandas per file), so the driver materializes
     only one summary row per file — the O(files) it already pays to
     plan splits.
     """
-    import json as _json
-
     import pandas as pd
     from pyspark.sql import types as T
 
-    from fourmc_spark.sources.datasource import STATS_SUFFIX, _parse_flat_ddl
+    from fourmc_spark.sources.datasource import _parse_flat_ddl
 
     st = _parse_flat_ddl(schema_ddl)  # same surface the typed scan takes
     cols = list(columns) if columns else [f.name for f in st.fields]
@@ -1211,69 +941,41 @@ def analyze_stats(
     per_block = src.groupBy("_file", "offset").agg(*aggs)
     want_blocks = blocks
 
-    def _decode(c: str, i: int, v):
-        v = _json_stat_value(v)
-        if v is not None:
-            if c in integral or c in ts_cols:
-                v = int(v)
-            elif c in floats:
-                v = float(v)  # parses "NaN"/"Infinity"/"-Infinity" too
+    def _decode(c: str, v):
+        if v is None or (
+            not isinstance(v, (str, bytes, list, dict)) and pd.isna(v)
+        ):
+            return None  # NaN/NaT from an all-null span
+        v = sidecar.json_value(v)
+        if c in integral or c in ts_cols:
+            return int(v)
+        if c in floats:
+            return float(v)  # parses "NaN"/"Infinity"/"-Infinity" too
         return v
 
     def _write_sidecar(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
         fpath = key[0]
-        pdf = pdf.sort_values("offset")
-        file_cols = {}
-        for i, c in enumerate(cols):
-            mns = [x for x in (_decode(c, i, v) for v in pdf[f"__min_{i}"])
-                   if x is not None]
-            mxs = [x for x in (_decode(c, i, v) for v in pdf[f"__max_{i}"])
-                   if x is not None]
-            file_cols[c] = {
-                "min": _zone_min(mns),
-                "max": _zone_max(mxs),
-                "nulls": int(pdf[f"__nulls_{i}"].sum()),
+        span = sidecar.Span(cols)
+        entries = []
+        for _, r in pdf.sort_values("offset").iterrows():
+            c_stats = {
+                c: [
+                    _decode(c, r[f"__min_{i}"]),
+                    _decode(c, r[f"__max_{i}"]),
+                    int(r[f"__nulls_{i}"]),
+                ]
+                for i, c in enumerate(cols)
             }
-        meta = {
-            "version": 2,
-            "size": os.path.getsize(fpath),
-            "rows": int(pdf["__rows"].sum()),
-            "columns": file_cols,
-        }
-        # bloom tiers sealed by analyze_bloom for the SAME bytes stay
-        # valid — re-ANALYZE of min/max must not drop either of them
-        try:
-            with open(fpath + STATS_SUFFIX) as f:
-                old = _json.load(f)
-            if old.get("size") == meta["size"]:
-                if isinstance(old.get("bloom"), dict):
-                    meta["bloom"] = old["bloom"]
-                if isinstance(old.get("bloom_blocks"), dict):
-                    meta["bloom_blocks"] = old["bloom_blocks"]
-        except (OSError, ValueError):
-            pass
-        if want_blocks:
-            meta["blocks"] = [
-                {
-                    "o": int(r["offset"]),
-                    "c": {
-                        c: [
-                            _decode(c, i, r[f"__min_{i}"]),
-                            _decode(c, i, r[f"__max_{i}"]),
-                            int(r[f"__nulls_{i}"]),
-                        ]
-                        for i, c in enumerate(cols)
-                    },
-                }
-                for _, r in pdf.iterrows()
-            ]
-        tmp = fpath + STATS_SUFFIX + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        os.replace(tmp, fpath + STATS_SUFFIX)
+            for c, st in c_stats.items():
+                span.fold(c, *st)
+            entries.append({"o": int(r["offset"]), "c": c_stats})
+        rows = int(pdf["__rows"].sum())
+        sidecar.write(
+            fpath, rows=rows, columns=span.columns(),
+            blocks=entries if want_blocks else None,
+        )
         return pd.DataFrame(
-            {"file": [fpath], "rows": [int(pdf["__rows"].sum())],
-             "n_blocks": [len(pdf)]}
+            {"file": [fpath], "rows": [rows], "n_blocks": [len(pdf)]}
         )
 
     summaries = (
@@ -1350,27 +1052,20 @@ def analyze_bloom(
     in the sidecar). The block tier is the within-file complement: a
     kept 256 MB file (≈64 blocks) scans only the blocks whose bitmap
     may hold the probe — parquet-page economics for point lookups on
-    ANY layout, clustered or not. Compaction OR-merges carried file
-    blooms (union of inputs = bitwise OR, exact) and carries block
-    blooms by offset remap with the same seam rule as zone maps, so
-    steady-state needs no re-ANALYZE.
+    ANY layout, clustered or not. Compaction carries both tiers (the
+    carry rule in format/sidecar.py), so steady-state needs no
+    re-ANALYZE.
     """
-    import json as _json
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, _parse_flat_ddl, seal_bloom_spec,
-    )
+    from fourmc_spark.sources.datasource import _parse_flat_ddl
 
-    from fourmc_spark.sources.datasource import validate_bloom_geometry
-
-    validate_bloom_geometry(bits, k, "analyze_bloom")
+    sidecar.validate_bloom_geometry(bits, k, "analyze_bloom")
     bk = block_k if block_k is not None else k
     if block_bits is not None:
-        validate_bloom_geometry(
+        sidecar.validate_bloom_geometry(
             block_bits, bk, "analyze_bloom (block tier)", max_bits=1 << 24
         )
     st = _parse_flat_ddl(schema_ddl)
@@ -1495,13 +1190,12 @@ def analyze_bloom(
             for (fp, cname, blk), sub in data.groupby(
                 ["_file", "col_name", "block"], sort=False
             ):
-                n_bits = bits if blk == -1 else block_bits
                 key = (fp, cname, int(blk))
-                bm = acc.get(key)
-                if bm is None:
-                    bm = acc[key] = np.zeros(n_bits // 8, dtype=np.uint8)
-                p = sub["pos"].to_numpy(dtype=np.int64)
-                _or_bit_positions(bm, p)
+                acc[key] = sidecar.pack_bits(
+                    sub["pos"].to_numpy(dtype=np.int64),
+                    bits if blk == -1 else block_bits,
+                    into=acc.get(key),
+                )
         files, names, blks, bms, dense = [], [], [], [], []
         for (fp, cname, blk), bm in acc.items():
             # popcount FIRST (256-entry table) to pick the encoding:
@@ -1544,17 +1238,6 @@ def analyze_bloom(
 
     def _amend(key: tuple, pdf: "pd.DataFrame") -> "pd.DataFrame":
         fpath = key[0]
-        meta = None
-        try:
-            with open(fpath + STATS_SUFFIX) as f:
-                meta = _json.load(f)
-            if meta.get("size") != os.path.getsize(fpath):
-                meta = None  # stale: data rewritten after the last ANALYZE
-        except (OSError, ValueError):
-            meta = None
-        if meta is None:
-            meta = {"version": 2, "size": os.path.getsize(fpath)}
-        import base64 as _b64
 
         def _merge(sub: "pd.DataFrame", n_bits: int) -> "np.ndarray":
             bm = np.zeros(n_bits // 8, dtype=np.uint8)
@@ -1564,23 +1247,21 @@ def analyze_bloom(
                 if is_dense:
                     bm |= np.frombuffer(part, dtype=np.uint8)
                 else:
-                    p = np.frombuffer(part, dtype="<u4").astype(np.int64)
-                    _or_bit_positions(bm, p)
+                    sidecar.pack_bits(
+                        np.frombuffer(part, dtype="<u4"), n_bits, into=bm
+                    )
             return bm
 
-        blooms = meta.setdefault("bloom", {})
+        blooms = {}
         set_bits = 0
         data = pdf[pdf["col_name"].notna()]
         ftier = data[data["block"] == -1]
         for c in cols:
             bm = _merge(ftier[ftier["col_name"] == c], bits)
-            blooms[c] = seal_bloom_spec(bm.tobytes(), bits, k, fams[c])
+            blooms[c] = sidecar.seal_bloom_spec(bm, bits, k, fams[c])
             set_bits += int(np.unpackbits(bm).sum())
+        bloom_blocks = None
         if block_bits is not None:
-            from fourmc_spark.sources.datasource import (
-                seal_bloom_blocks_header,
-            )
-
             # ONE grouped pass over the block-tier rows (a per-offset
             # boolean filter would rescan the frame O(blocks) times —
             # quadratic exactly when blocks are many, the tier's
@@ -1596,25 +1277,17 @@ def analyze_bloom(
             # seed rows guarantee every block offset appears in pdf
             all_offs = sorted(int(o) for o in btier["block"].unique())
             zero = np.zeros(block_bits // 8, dtype=np.uint8)
-            entries = [
-                {
-                    "o": off,
-                    "c": {
-                        c: _b64.b64encode(
-                            grouped.get(off, {}).get(c, zero).tobytes()
-                        ).decode("ascii")
+            bloom_blocks = sidecar.seal_bloom_blocks_header(
+                block_bits, bk, fams,
+                [
+                    {"o": off, "c": {
+                        c: sidecar.b64(grouped.get(off, {}).get(c, zero))
                         for c in cols
-                    },
-                }
-                for off in all_offs
-            ]
-            meta["bloom_blocks"] = seal_bloom_blocks_header(
-                block_bits, bk, fams, entries
+                    }}
+                    for off in all_offs
+                ],
             )
-        tmp = fpath + STATS_SUFFIX + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(meta, f)
-        os.replace(tmp, fpath + STATS_SUFFIX)
+        sidecar.write(fpath, bloom=blooms, bloom_blocks=bloom_blocks)
         return pd.DataFrame({"file": [fpath], "set_bits": [set_bits]})
 
     summaries = (

@@ -2506,14 +2506,12 @@ def _parquet_col_minmax(path: str, col: str):
                 + td.microseconds
             )
         return x
-    lo, hi = min(map(_as_int, los), default=None), max(
-        map(_as_int, his), default=None
-    )
-    if lo is None or hi is None or any(
-        _as_int(x) is None for x in los + his
-    ):
+    # convert first: min() over a None (float/string/date statistics)
+    # would raise instead of falling back
+    ints = [_as_int(x) for x in los + his]
+    if not los or None in ints:
         return None
-    return lo, hi
+    return min(ints[:len(los)]), max(ints[len(los):])
 
 
 def _det_range_shuffle(df, n: int, key, lo: int, hi: int):
@@ -2521,9 +2519,13 @@ def _det_range_shuffle(df, n: int, key, lo: int, hi: int):
     expression ``key`` (known span [lo, hi]) without a sampling job:
     equal-width bucket, then repartition on the bucket's probe value
     (distinct Murmur3 pmod class per bucket). Integer arithmetic
-    throughout — exact, ANSI-safe for any epoch-micros span."""
+    throughout (``div`` is Spark's integral division; ``/`` would round
+    through double above 2^53) — exact, ANSI-safe for any epoch-micros
+    span."""
     span = hi - lo + 1
-    b = F.floor(((key - F.lit(lo)) * F.lit(n)) / F.lit(span)).cast("int")
+    b = F.call_function(
+        "div", (key - F.lit(lo)) * F.lit(n), F.lit(span)
+    ).cast("int")
     b = F.least(F.lit(n - 1), F.greatest(F.lit(0), b))
     probes = _partition_probe_values(n)
     probe = F.element_at(
@@ -2919,7 +2921,7 @@ def proto_4mc_zonemap_scan_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_stats_proto
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
 
     register_fourmc(spark)
     field_list = [
@@ -3019,9 +3021,7 @@ def proto_4mc_bloom_scan_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_stats_proto
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
+    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
 
     register_fourmc(spark)
     field_list = [
@@ -3465,7 +3465,7 @@ def sql_4mc_zonemap_scan_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_stats
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
 
     register_fourmc(spark)
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
@@ -5138,7 +5138,7 @@ def sql_4mc_sinkstats_scan_q(spark, sf):
     import tempfile
 
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
 
     register_fourmc(spark)
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
@@ -5233,7 +5233,7 @@ def sql_4mc_zonemap_ts_scan_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_stats
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
 
     register_fourmc(spark)
     ddl = ("ts timestamp, event_id bigint, user_id bigint, "
@@ -5334,7 +5334,7 @@ def maintenance_compact_zonemap_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_stats, compact_blocks
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
 
     register_fourmc(spark)
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
@@ -5439,9 +5439,7 @@ def sql_4mc_bloom_scan_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_bloom
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
+    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
 
     register_fourmc(spark)
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
@@ -5517,7 +5515,7 @@ def sql_4mc_csv_zonemap_scan_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_stats
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
 
     register_fourmc(spark)
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
@@ -5657,9 +5655,7 @@ def maintenance_compact_bloom_q(spark, sf):
 
     from fourmc_spark.operators.maintenance import analyze_bloom, compact_blocks
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
+    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
 
     register_fourmc(spark)
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
@@ -6041,7 +6037,7 @@ def stream_4mc_sinkstats_scan_q(spark, sf):
     import tempfile
 
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import STATS_SUFFIX
+    from fourmc_spark.format.sidecar import STATS_SUFFIX
     from fourmc_spark.streaming import read_events_stream
 
     register_fourmc(spark)
@@ -6126,9 +6122,7 @@ def stream_4mc_bloomsink_scan_q(spark, sf):
     import tempfile
 
     from fourmc_spark.session import register_fourmc
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, seal_bloom_spec,
-    )
+    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
     from fourmc_spark.streaming import read_events_stream
 
     register_fourmc(spark)

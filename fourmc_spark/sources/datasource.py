@@ -42,7 +42,13 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    LongType, StringType, StructField, StructType, TimestampType,
+)
+
+from fourmc_spark.format import sidecar
+# re-exported: callers (perfbench/wl_ingest.py) import it from here
+from fourmc_spark.format.sidecar import STATS_SUFFIX  # noqa: F401
 
 DEFAULT_MAX_PARTITION_BYTES = 128 * 1024 * 1024
 # Cap on blocks per split: bounds a partition's UNCOMPRESSED size at
@@ -501,7 +507,7 @@ class FourMcDataSourceReader(DataSourceReader):
                     continue  # file pruned by partition-column predicate
             dropped_blocks: frozenset = frozenset()
             if self._zone or self._point or self._nullreq:
-                meta = _load_zone_sidecar(path)
+                meta = sidecar.load(path)
                 if meta is not None:
                     if self._zone and _zone_file_pruned(meta, self._zone):
                         continue  # file pruned by analyze_stats zone map
@@ -1107,24 +1113,6 @@ class _TypedCsvParser:
             ) from e
 
 
-# per-file zone-map sidecar written by operators/maintenance.analyze_stats
-STATS_SUFFIX = ".stats.json"
-
-
-def _zone_comparable(a, b) -> bool:
-    """Same-ordering check for two SIDECAR values (JSON primitives):
-    number vs number, str vs str. Used by the compaction stats carry to
-    refuse min/max across inputs analyzed under different DDLs. (Bound
-    vs sidecar comparisons go through _zone_pair, which also parses
-    temporal ISO strings.)"""
-    def _num(x):
-        return isinstance(x, (int, float)) and not isinstance(x, bool)
-
-    return (_num(a) and _num(b)) or (
-        isinstance(a, str) and isinstance(b, str)
-    )
-
-
 def _zone_pair(stat, bv):
     """Normalize a (sidecar stat value, pushed bound value) pair into
     two directly comparable objects, or None when no ordering is
@@ -1168,81 +1156,15 @@ def _zone_pair(stat, bv):
     return None
 
 
-#: parsed-sidecar cache — the SAME freshness contract as the
-#: footer-index cache in format/reader.scan_file_info: keyed on
-#: (sidecar size, sidecar mtime_ns, data size), and every hit ALSO
-#: re-reads a small content fingerprint (first+last bytes of the
-#: sidecar), because stat() alone is spoofable (cp -p / rsync -t /
-#: same-tick rewrites) and serving a stale parsed zone map could
-#: falsely prune files. Bloom-fattened sidecars cost ~300 µs to parse
-#: (measured, scripts/measure_bloom_planning.py: the 175 KB base64
-#: string dominates json.loads); the fingerprint pread is ~10 µs.
-#: Stale/invalid sidecars negative-cache (the _STALE sentinel) so a
-#: rewritten-but-not-re-ANALYZEd tree doesn't re-parse every fat
-#: sidecar on every plan. Bounded with the sibling cache's atomic
-#: clear (a fat sidecar parses to ~200 KB, so 2048 entries tops out
-#: ~400 MB on the driver — small next to the O(files) split plan).
-_SIDECAR_CACHE: dict[str, tuple[tuple, bytes, object]] = {}
-_SIDECAR_CACHE_MAX = 2048
-_SIDECAR_FP_BYTES = 32
-_STALE = object()  # negative-cache sentinel: sidecar present but unusable
-
-
-def _sidecar_fingerprint(f, size: int) -> bytes:
-    f.seek(0)
-    head = f.read(_SIDECAR_FP_BYTES)
-    f.seek(max(0, size - _SIDECAR_FP_BYTES))
-    return head + f.read(_SIDECAR_FP_BYTES)
-
-
-def _load_zone_sidecar(path: str):
-    """The file's analyze_stats sidecar, or None when missing,
-    unreadable, or STALE (recorded size != current size — the data was
-    rewritten after ANALYZE)."""
-    import json
-
-    sc = path + STATS_SUFFIX
-    try:
-        st = os.stat(sc)
-        data_size = os.path.getsize(path)
-    except OSError:
-        return None
-    key = (st.st_size, st.st_mtime_ns, data_size)
-    hit = _SIDECAR_CACHE.get(path)
-    if hit is not None and hit[0] == key:
-        try:
-            with open(sc, "rb") as f:
-                if _sidecar_fingerprint(f, st.st_size) == hit[1]:
-                    meta = hit[2]
-                    return None if meta is _STALE else meta
-        except OSError:
-            return None
-    try:
-        with open(sc, "rb") as f:
-            raw = f.read()
-        meta = json.loads(raw)
-        if meta.get("size") != data_size:
-            meta = _STALE
-    except (OSError, ValueError):
-        return None
-    fp = (
-        raw[:_SIDECAR_FP_BYTES]
-        + raw[max(0, len(raw) - _SIDECAR_FP_BYTES):]
-    )
-    if len(_SIDECAR_CACHE) >= _SIDECAR_CACHE_MAX:
-        _SIDECAR_CACHE.clear()  # atomic under concurrent planners
-    _SIDECAR_CACHE[path] = (key, fp, meta)
-    return None if meta is _STALE else meta
-
-
 def _range_excluded(mn, mx, bound) -> bool:
     """True iff a column whose values span [mn, mx] provably cannot
-    satisfy the (lo, lo_inc, hi, hi_inc) bound conjunction. min/max of
-    None means the span holds no non-null value — range and equality
-    predicates reject NULL, so nothing can match."""
+    satisfy the (lo, lo_inc, hi, hi_inc) bound conjunction. min and max
+    both None means the span holds no non-null value — range and
+    equality predicates reject NULL, so nothing can match. Only one of
+    them None is a malformed span: kept."""
     lo, lo_inc, hi, hi_inc = bound
     if mn is None or mx is None:
-        return True
+        return mn is None and mx is None
     if lo is not None:
         p = _zone_pair(mx, lo)
         if p is not None and (p[0] < p[1] or (p[0] == p[1] and not lo_inc)):
@@ -1292,17 +1214,6 @@ def _zone_dropped_blocks(meta: dict, zone: dict[str, list]) -> frozenset:
     return frozenset(dropped)
 
 
-#: bloom sidecar hash contract (shared with operators/maintenance.
-#: analyze_bloom, which imports these): xxhash64(CAST(col AS STRING)
-#: UTF-8 bytes) with Spark's fixed seed 42, double-hashed into k
-#: positions (h1 + i*h2) mod bits where h1 = low 32 bits, h2 = high 32
-#: bits | 1; bit p sits at byte p >> 3, mask 1 << (p & 7). The probe
-#: recognizes exactly this tag — sidecars written under any future
-#: contract are ignored (conservative: the file is scanned).
-BLOOM_ALGO = "xxh64-str"
-BLOOM_SEED = 42
-
-
 def _next_prefix(v: str) -> str | None:
     """Smallest string greater than every string with prefix *v* (an
     EXCLUSIVE upper bound for StartsWith), or None when no such string
@@ -1318,6 +1229,11 @@ def _next_prefix(v: str) -> str | None:
         if nxt <= 0x10FFFF:
             return v[:i] + chr(nxt)
     return None
+
+
+def _zero(nulls) -> bool:
+    """A null count of exactly int 0 (False or 0.0 is a malformed one)."""
+    return type(nulls) is int and nulls == 0
 
 
 def _null_file_pruned(meta: dict, nullreq: dict[str, set]) -> bool:
@@ -1337,7 +1253,7 @@ def _null_file_pruned(meta: dict, nullreq: dict[str, set]) -> bool:
             and st.get("max") is None
         ):
             return True
-        if "null" in req and st.get("nulls") == 0:
+        if "null" in req and _zero(st.get("nulls")):
             return True
     return False
 
@@ -1353,186 +1269,55 @@ def _null_dropped_blocks(meta: dict, nullreq: dict[str, set]) -> frozenset:
             if not isinstance(st, (list, tuple)) or len(st) < 3:
                 continue
             if ("notnull" in req and st[0] is None and st[1] is None) or (
-                "null" in req and st[2] == 0
+                "null" in req and _zero(st[2])
             ):
                 dropped.add(b.get("o"))
                 break
     return frozenset(dropped)
 
 
-def bloom_positions(h: int, k: int, bits: int):
-    """THE position derivation, shared by every Python bloom builder and
-    the probe (the JVM builder in analyze_bloom mirrors it as SQL
-    expressions, pinned equivalent by tests): double hashing with
-    h1 = low 32 bits, h2 = high 32 bits | 1, position_i =
-    (h1 + i*h2) mod bits. Any drift between a builder and the probe
-    would silently mis-prune under the same contract tag — this helper
-    exists so there is exactly one derivation to drift."""
-    h1 = h & 0xFFFFFFFF
-    h2 = (h >> 32) | 1
-    for i in range(k):
-        yield (h1 + i * h2) % bits
-
-
-def seal_bloom_spec(bitmap: bytes, bits: int, k: int, fam: str) -> dict:
-    """The sidecar bloom spec dict every builder seals: contract tag,
-    geometry, the build-time type FAMILY ('int' | 'str' — the probe
-    refuses a spec whose family differs from the read schema's, because
-    a DDL drift between build and read could hash different canonical
-    text for the same data), and the base64 bitmap."""
-    import base64
-
-    return {
-        "algo": BLOOM_ALGO,
-        "seed": BLOOM_SEED,
-        "bits": bits,
-        "k": k,
-        "fam": fam,
-        "b64": base64.b64encode(bitmap).decode("ascii"),
-    }
-
-
-def seal_bloom_blocks_header(
-    bits: int, k: int, fams: dict, entries: list
-) -> dict:
-    """The sidecar ``bloom_blocks`` header every builder (and the
-    compaction carry) seals: one shared geometry + per-column family
-    map, with per-block per-column base64 bitmaps under ``blocks``."""
-    return {
-        "algo": BLOOM_ALGO,
-        "seed": BLOOM_SEED,
-        "bits": bits,
-        "k": k,
-        "fam": dict(fams),
-        "blocks": entries,
-    }
-
-
-def validate_bloom_geometry(
-    bits: int, k: int, what: str, max_bits: int = 1 << 27
-) -> None:
-    """Shared geometry validation for every bloom builder."""
-    if bits % 8 or not 64 <= bits <= max_bits:
-        raise ValueError(
-            f"{what}: bits must be a multiple of 8 in [64, "
-            f"2^{max_bits.bit_length() - 1}], got {bits}"
-        )
-    if not 1 <= k <= 16:
-        raise ValueError(f"{what}: k must be in [1, 16], got {k}")
-
-
-def _decode_bloom_spec(spec, fam: str):
-    """(bitmap bytes, bits, k) when *spec* is a well-formed bloom under
-    the recognized contract AND was built for type family *fam*; None
-    on any doubt (the file is scanned). Decoded ONCE per (file, column)
-    — probing an IN-list reuses the decoded bitmap."""
-    import base64
-
-    if (
-        not isinstance(spec, dict)
-        or spec.get("algo") != BLOOM_ALGO
-        or spec.get("seed") != BLOOM_SEED
-        or spec.get("fam") != fam
-    ):
-        return None
-    try:
-        bits, k = spec["bits"], spec["k"]
-        bm = base64.b64decode(spec["b64"], validate=True)
-    except (KeyError, TypeError, ValueError):
-        return None
-    if (
-        not isinstance(bits, int)
-        or not isinstance(k, int)
-        or isinstance(bits, bool)
-        or isinstance(k, bool)
-        or bits <= 0
-        or not 1 <= k <= 64
-        or len(bm) * 8 != bits
-    ):
-        return None
-    return bm, bits, k
-
-
-def _bloom_canon(v, fam: str):
-    """Canonical probe text for *v* under type family *fam*, or None
-    when the value's type doesn't match (can't prove absence)."""
-    if fam == "int" and isinstance(v, int) and not isinstance(v, bool):
-        return str(v)
-    if fam == "str" and isinstance(v, str):
-        return v
-    return None
+def _probe_texts(vals, fam: str) -> list[str] | None:
+    """Canonical probe text per value, or None when some value cannot
+    be probed under type family *fam* (absence then unprovable)."""
+    texts = [sidecar.bloom_text(v, fam) for v in vals]
+    return None if None in texts else texts
 
 
 def _bloom_dropped_blocks(
     meta: dict, points: dict[str, set], typemap: dict[str, str]
 ) -> frozenset:
-    """Block offsets whose BLOCK-tier bloom (sidecar ``bloom_blocks``:
-    shared geometry header + per-block per-column base64 bitmaps)
+    """Block offsets whose BLOCK-tier bloom (sidecar ``bloom_blocks``)
     proves every probed value absent — the within-file complement of
     the file tier: a kept 256 MB file scans only the blocks that may
     hold the probed id. Conservative on every doubt: foreign tag,
     geometry/bitmap-length mismatch, family drift, missing column or
     block entry => the block is kept."""
-    import base64
-
-    from fourmc_spark.format.native import xxh64
-
-    bb = meta.get("bloom_blocks")
-    if not isinstance(bb, dict) or bb.get("algo") != BLOOM_ALGO or (
-        bb.get("seed") != BLOOM_SEED
-    ):
+    tier = sidecar.decode_bloom_blocks(meta)
+    if tier is None:
         return frozenset()
-    bits, k = bb.get("bits"), bb.get("k")
-    fams = bb.get("fam")
-    if (
-        not isinstance(bits, int)
-        or not isinstance(k, int)
-        or isinstance(bits, bool)
-        or isinstance(k, bool)
-        or bits <= 0
-        or bits % 8
-        or not 1 <= k <= 64
-        or not isinstance(fams, dict)
-    ):
-        return frozenset()
+    bits, k, fams, entries = tier
     # positions per probed column computed ONCE, reused for every block
-    col_pos: dict[str, list[list[int]] | None] = {}
-    for col, vals in points.items():
+    col_pos = {}
+    for col in points:
         fam = typemap.get(col)
-        if fam is None or fams.get(col) != fam:
-            continue
-        pos_lists = []
-        for v in vals:
-            canon = _bloom_canon(v, fam)
-            if canon is None:
-                pos_lists = None  # un-probeable value: skip the column
-                break
-            h = xxh64(canon.encode("utf-8"), BLOOM_SEED)
-            pos_lists.append(list(bloom_positions(h, k, bits)))
-        if pos_lists:
-            col_pos[col] = pos_lists
+        texts = (
+            _probe_texts(points[col], fam)
+            if fam and fams.get(col) == fam else None
+        )
+        if texts:
+            col_pos[col] = [
+                list(sidecar.text_positions(t, k, bits)) for t in texts
+            ]
     if not col_pos:
         return frozenset()
     dropped = set()
-    for b in bb.get("blocks") or ():
-        c = b.get("c")
-        if not isinstance(c, dict):
-            continue
+    for b in entries:
         for col, pos_lists in col_pos.items():
-            b64 = c.get(col)
-            if not isinstance(b64, str):
-                continue
-            try:
-                bm = base64.b64decode(b64, validate=True)
-            except (TypeError, ValueError):
-                continue
-            if len(bm) * 8 != bits:
-                continue
-            if not any(
-                all((bm[p >> 3] >> (p & 7)) & 1 for p in pl)
-                for pl in pos_lists
+            bm = sidecar.decode_bitmap(b["c"].get(col), bits)
+            if bm is not None and not any(
+                sidecar.may_contain(bm, pl) for pl in pos_lists
             ):
-                dropped.add(b.get("o"))
+                dropped.add(b["o"])
                 break
     return frozenset(dropped)
 
@@ -1545,34 +1330,20 @@ def _bloom_file_pruned(
     foreign algo/seed tag, build-vs-read type-family mismatch, value
     whose type doesn't match the declared column family (its canonical
     text could differ from CAST AS STRING) => NOT pruned."""
-    from fourmc_spark.format.native import xxh64
-
-    blooms = meta.get("bloom")
-    if not isinstance(blooms, dict):
-        return False
-    for col, vals in points.items():
+    blooms = meta.get("bloom", {})
+    for col in points:
         fam = typemap.get(col)
         if fam is None:
             continue
-        decoded = _decode_bloom_spec(blooms.get(col), fam)
+        decoded = sidecar.decode_bloom_spec(blooms.get(col), fam)
         if decoded is None:
             continue
         bm, bits, k = decoded
-        any_hit = False
-        provable = True
-        for v in vals:
-            canon = _bloom_canon(v, fam)
-            if canon is None:
-                provable = False
-                break
-            h = xxh64(canon.encode("utf-8"), BLOOM_SEED)
-            if all(
-                (bm[p >> 3] >> (p & 7)) & 1
-                for p in bloom_positions(h, k, bits)
-            ):
-                any_hit = True
-                break
-        if provable and not any_hit:
+        texts = _probe_texts(points[col], fam)
+        if texts is not None and not any(
+            sidecar.may_contain(bm, sidecar.text_positions(t, k, bits))
+            for t in texts
+        ):
             return True
     return False
 
@@ -1771,7 +1542,7 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     "fourmc sink: bloomcolumns requires statsschema "
                     "(the declared NDJSON fields to parse)"
                 )
-            validate_bloom_geometry(
+            sidecar.validate_bloom_geometry(
                 self.bloom_bits, self.bloom_k, "fourmc sink bloomcolumns"
             )
             from pyspark.sql import types as _T
@@ -1792,6 +1563,15 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                         f"{types[c].simpleString()}; only long/int/short/"
                         "string fields are bloom-eligible"
                     )
+        self.bloom_fams = {
+            c: "str" if isinstance(types[c], StringType) else "int"
+            for c in self.bloom_cols
+        }
+        # instants seal as epoch micros (see format/sidecar.py)
+        self.stats_instants = {
+            f.name for f in self.stats_schema.fields
+            if isinstance(f.dataType, TimestampType)
+        } if self.stats_schema is not None else set()
         # pick the string column to serialize as lines
         data_names = [n for n in names if n not in self.partition_cols]
         if "value" in data_names:
@@ -1876,11 +1656,8 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                     f, codec=codec, level=self.level, block_size=self.block_size
                 )
             acc = (
-                # per column: [min, max, nulls, has_nan]; bloom: set of
-                # bit positions per bloomcolumns field
-                {"rows": 0,
-                 "cols": {c: [None, None, 0, False] for c in stat_cols},
-                 "bloom": {c: set() for c in self.bloom_cols}}
+                # zone map + bloom bit positions per bloomcolumns field
+                (sidecar.Span(stat_cols), {c: set() for c in self.bloom_cols})
                 if self.stats_schema is not None else None
             )
             streams[reldir] = (f, w, staged, acc)
@@ -1893,7 +1670,7 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
             # int64 stays exact (no pandas float64 boundary)
             import pyarrow.compute as pc
 
-            acc = streams[reldir][3]
+            span, bloom = streams[reldir][3]
             strs = values.cast(pa.string())
             # NULL values write as empty lines; both read back as
             # all-null rows, so both stat as the record model's all-null
@@ -1908,111 +1685,38 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
                 pa.array([0, len(strs)], type=pa.int32()), strs
             )
             nd = pc.binary_join(la, "\n")[0].as_buffer()
-            arrays = stats_parser.arrays(nd)
-            acc["rows"] += len(strs)
-            for c, col in zip(stat_cols, arrays):
-                st = acc["cols"][c]
-                st[2] += col.null_count
-                n_valid = len(col) - col.null_count
-                if pa.types.is_floating(col.type) and n_valid:
-                    # Arrow min_max SKIPS NaN (all-NaN spans return the
-                    # +inf/-inf identities) but Spark's SQL ordering
-                    # puts NaN ABOVE everything — x >= 0 matches a NaN
-                    # row. Track NaN presence so the sealed max can be
-                    # widened to NaN (comparisons against NaN are all
-                    # false, so such spans never prune — conservative
-                    # AND semantically exact, NaN being Spark's max).
-                    n_nan = pc.sum(
-                        pc.is_nan(col), min_count=0
-                    ).as_py() or 0
-                    if n_nan:
-                        st[3] = True
-                    n_valid -= n_nan
-                if n_valid:
-                    mm = pc.min_max(col)
-                    mn = mm["min"].as_py()
-                    mx = mm["max"].as_py()
-                    if st[0] is None or mn < st[0]:
-                        st[0] = mn
-                    if st[1] is None or mx > st[1]:
-                        st[1] = mx
-                if c in acc["bloom"]:
-                    from fourmc_spark.format.native import xxh64
+            arrays = dict(zip(stat_cols, stats_parser.arrays(nd)))
+            span.add(arrays, len(strs))
+            for c, pos in bloom.items():
+                uniq = pc.unique(pc.drop_null(arrays[c].cast(pa.string())))
+                for v in uniq.to_pylist():
+                    pos.update(sidecar.text_positions(
+                        v, self.bloom_k, self.bloom_bits
+                    ))
 
-                    uniq = pc.unique(pc.drop_null(col.cast(pa.string())))
-                    pos = acc["bloom"][c]
-                    bits, k = self.bloom_bits, self.bloom_k
-                    for v in uniq:
-                        h = xxh64(v.as_py().encode("utf-8"), BLOOM_SEED)
-                        pos.update(bloom_positions(h, k, bits))
-
-        def _seal_sidecar(f, staged: str, acc) -> None:
+        def _seal_sidecar(staged: str, acc) -> None:
             if acc is None:
                 return
-            import datetime
-
-            from pyspark.sql import types as T
-
-            # TimestampType stats travel as EPOCH MICROS ints — the one
-            # representation the pushdown can compare against an
-            # instant-typed filter value without knowing the session
-            # timezone (the Arrow parse normalized zone-suffixed text
-            # to the UTC wall clock, so naive-epoch arithmetic is exact)
-            ts_cols = {
-                f2.name for f2 in self.stats_schema.fields
-                if isinstance(f2.dataType, T.TimestampType)
-            }
-            _EPOCH = datetime.datetime(1970, 1, 1)
-            _US = datetime.timedelta(microseconds=1)
-
-            def _jv(c, v):
-                if isinstance(v, datetime.datetime):
-                    if c in ts_cols:
-                        return (v.replace(tzinfo=None) - _EPOCH) // _US
-                    return v.isoformat(sep=" ")
-                if isinstance(v, datetime.date):
-                    return v.isoformat()
-                return v
-
-            def _col_meta(c, st):
-                mn, mx = _jv(c, st[0]), _jv(c, st[1])
-                if st[3]:  # NaN present: NaN is Spark's greatest double
-                    mx = float("nan")
-                    if mn is None:  # every valid value was NaN
-                        mn = float("nan")
-                return {"min": mn, "max": mx, "nulls": st[2]}
-
-            meta = {
-                "version": 2,
-                "size": os.path.getsize(staged),
-                "rows": acc["rows"],
-                "columns": {
-                    c: _col_meta(c, st) for c, st in acc["cols"].items()
-                },
-            }
-            if self.bloom_cols:
-                fams = {
-                    f2.name: "str"
-                    if isinstance(f2.dataType, T.StringType) else "int"
-                    for f2 in self.stats_schema.fields
-                }
-                bitmaps = {}
-                for c in self.bloom_cols:
-                    bm = bytearray(self.bloom_bits // 8)
-                    for p in acc["bloom"][c]:
-                        bm[p >> 3] |= 1 << (p & 7)
-                    bitmaps[c] = seal_bloom_spec(
-                        bytes(bm), self.bloom_bits, self.bloom_k, fams[c]
+            span, bloom = acc
+            bits, k = self.bloom_bits, self.bloom_k
+            sidecar.write(
+                staged,
+                rows=span.rows,
+                columns=span.columns(self.stats_instants),
+                bloom={
+                    c: sidecar.seal_bloom_spec(
+                        sidecar.pack_bits(pos, bits), bits, k,
+                        self.bloom_fams[c],
                     )
-                meta["bloom"] = bitmaps
-            with open(staged + STATS_SUFFIX, "w") as sf:
-                _json.dump(meta, sf)
+                    for c, pos in bloom.items()
+                },
+            )
 
         def _close_stream(reldir: str) -> None:
             f, w, staged, acc = streams.pop(reldir)
             w.close()
             f.close()
-            _seal_sidecar(f, staged, acc)
+            _seal_sidecar(staged, acc)
 
         def _roll_if_needed(reldir: str) -> None:
             if self.max_file_bytes <= 0 or reldir not in streams:
@@ -2065,30 +1769,18 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         if self.overwrite:
             for old in self.existing:
-                # the data file's sidecar must not outlive it: a later
-                # file landing on the same name with a colliding byte
-                # size would re-adopt stats for different content
-                for p in (old, old + STATS_SUFFIX):
-                    try:
-                        os.remove(p)
-                    except FileNotFoundError:
-                        pass
+                # its sidecar goes too (staleness rule, format/sidecar.py)
+                try:
+                    os.remove(old)
+                except FileNotFoundError:
+                    pass
+                sidecar.evict(old)
         for m in messages:
             if m is not None:
                 for staged, final in m.files:
                     os.makedirs(os.path.dirname(final), exist_ok=True)
                     os.replace(staged, final)
-                    # statsschema sidecar rides along with its data
-                    # file; a stats-less file landing over a previous
-                    # occupant must also evict that occupant's sidecar
-                    # (mirrors maintenance._drop_stale_sidecar)
-                    if os.path.exists(staged + STATS_SUFFIX):
-                        os.replace(staged + STATS_SUFFIX, final + STATS_SUFFIX)
-                    else:
-                        try:
-                            os.remove(final + STATS_SUFFIX)
-                        except FileNotFoundError:
-                            pass
+                    sidecar.promote(staged, final)
         staging = os.path.join(self.path, "_temporary")
         try:
             os.rmdir(staging)
@@ -2101,6 +1793,6 @@ class FourMcDataSourceWriter(DataSourceArrowWriter):
         for m in messages or []:
             if m is not None:
                 for staged, _ in m.files:
-                    for p in (staged, staged + STATS_SUFFIX):
-                        if os.path.exists(p):
-                            os.remove(p)
+                    if os.path.exists(staged):
+                        os.remove(staged)
+                    sidecar.evict(staged)

@@ -28,6 +28,7 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceArrowWriter, WriterCommitMessage
 from pyspark.sql.types import StructType
 
+from fourmc_spark.format import sidecar
 from fourmc_spark.format.protobuf import ProtoField, USER_SCHEMA, spark_struct
 
 from .datasource import FourMcCommitMessage, FourMcDataSourceReader, FourMcInputPartition
@@ -230,16 +231,13 @@ class FourMcProtoWriter(DataSourceArrowWriter):
 
     def commit(self, messages) -> None:
         if self.overwrite:
-            from fourmc_spark.sources.datasource import STATS_SUFFIX
-
             for old in self.existing:
-                # an analyze_stats_proto sidecar must not outlive its
-                # data file (same eviction rule as the text sink)
-                for p in (old, old + STATS_SUFFIX):
-                    try:
-                        os.remove(p)
-                    except FileNotFoundError:
-                        pass
+                # an analyze_stats_proto sidecar goes with its data file
+                try:
+                    os.remove(old)
+                except FileNotFoundError:
+                    pass
+                sidecar.evict(old)
         for m in messages:
             if m is not None:
                 for staged, final in m.files:

@@ -34,6 +34,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from fourmc_spark.format import sidecar
+
 
 def _plan_file(path: str, max_partition_bytes: int, max_blocks: int = 0):
     """Block-aligned partitions for one sealed file (S1/X4/X5 semantics,
@@ -389,15 +391,14 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
         return self._w.write(iterator)
 
     def _discard_staging(self, messages) -> None:
-        from fourmc_spark.sources.datasource import STATS_SUFFIX
-
         for m in messages or []:
             if m is None:
                 continue
             for staged, _final in m.files:
-                for p in (staged, staged + STATS_SUFFIX if staged else None):
-                    if p and os.path.exists(p):
-                        os.remove(p)
+                if staged:
+                    if os.path.exists(staged):
+                        os.remove(staged)
+                    sidecar.evict(staged)
         try:
             os.rmdir(os.path.join(self.path, "_temporary"))
         except OSError:
@@ -470,21 +471,11 @@ class FourMcStreamWriter(DataSourceStreamArrowWriter):
                     d, f"part-b{batchId:010d}-{ti:05d}-{fi:03d}{ext}"
                 )
                 os.replace(staged, newname)
-                from fourmc_spark.sources.datasource import STATS_SUFFIX
-
-                if os.path.exists(staged + STATS_SUFFIX):
-                    # statsschema sidecar follows its sealed file
-                    os.replace(staged + STATS_SUFFIX, newname + STATS_SUFFIX)
-                else:
-                    # a stats-less file landing over a pre-existing
-                    # deterministic name (markers removed by hand,
-                    # checkpoint rebuilt into a kept output dir) must
-                    # evict the previous occupant's sidecar — the
-                    # size check alone could re-adopt it on collision
-                    try:
-                        os.remove(newname + STATS_SUFFIX)
-                    except FileNotFoundError:
-                        pass
+                # a stats-less file can land over a pre-existing
+                # deterministic name (markers removed by hand, checkpoint
+                # rebuilt into a kept output dir): promote evicts the
+                # previous occupant's sidecar then
+                sidecar.promote(staged, newname)
         self._write_marker(done_marker, batchId)
         staging = os.path.join(self.path, "_temporary")
         try:

@@ -80,10 +80,10 @@ def main() -> None:
                 n = len([p for p in parts if p.path])
             return times[0], min(times[1:]), n
 
-        from fourmc_spark.sources import datasource as _ds
+        from fourmc_spark.format import sidecar as _sc
 
         def cold():
-            _ds._SIDECAR_CACHE.clear()
+            _sc._SIDECAR_CACHE.clear()
 
         cold()
         c_full, w_full, n_full = plan([])

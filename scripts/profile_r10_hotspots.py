@@ -72,7 +72,7 @@ def profile_bloom(spark) -> None:
 
     from fourmc_spark.operators.maintenance import analyze_bloom
     from fourmc_spark.queries import _t
-    from fourmc_spark.sources.datasource import STATS_SUFFIX, seal_bloom_spec
+    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
 
     ddl = "event_id bigint, user_id bigint, event_type string, value double"
     ev = _t(spark, SF_DIR, "events").select(

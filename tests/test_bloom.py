@@ -17,9 +17,8 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import CaseInsensitiveDict, EqualTo, In
 
+from fourmc_spark.format.sidecar import BLOOM_ALGO, BLOOM_SEED
 from fourmc_spark.sources.datasource import (
-    BLOOM_ALGO,
-    BLOOM_SEED,
     FourMcDataSourceReader,
     _bloom_file_pruned,
     _parse_flat_ddl,
@@ -430,9 +429,8 @@ def test_bloom_never_false_negative_property():
     from hypothesis import strategies as st
 
     from fourmc_spark.format.native import xxh64
-    from fourmc_spark.sources.datasource import (
-        _bloom_file_pruned, bloom_positions, seal_bloom_spec,
-    )
+    from fourmc_spark.format.sidecar import bloom_positions, seal_bloom_spec
+    from fourmc_spark.sources.datasource import _bloom_file_pruned
 
     @settings(max_examples=150, deadline=None)
     @given(
@@ -494,7 +492,9 @@ def test_analyze_stats_and_bloom_coexist_any_order(spark, tmp_path):
 
 
 def test_merge_carried_blooms_or_and_mismatch_drop():
-    from fourmc_spark.operators.maintenance import _merge_carried_blooms
+    from fourmc_spark.format.sidecar import (
+        merge_blooms as _merge_carried_blooms,
+    )
 
     def spec(bm: bytes, **over):
         s = {"algo": BLOOM_ALGO, "seed": BLOOM_SEED, "bits": len(bm) * 8,
@@ -772,3 +772,105 @@ def test_partial_bitmap_merge_is_partitioning_invariant(spark, tmp_path):
     split = _seal_and_read(1)          # one block per split
     assert whole == split
     assert whole  # sanity: something was sealed
+
+
+# ---------------------------------------------------------------------------
+# producer conformance
+# ---------------------------------------------------------------------------
+
+_CONF_FIELDS = [
+    {"number": 1, "name": "k", "type": "int64"},
+    {"number": 2, "name": "name", "type": "string"},
+    {"number": 3, "name": "v", "type": "double"},
+]
+
+
+def _conformance_rows(n: int = 500, seed: int = 20261017) -> list[tuple]:
+    """Seeded rows exercising every sidecar value rule: int64 beyond
+    2^53, negative ints, non-ASCII strings, nulls in every column, and
+    a NaN double (Spark's greatest double)."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for i in range(n):
+        k = None if i % 97 == 13 else rng.randrange(-(2**62), 2**62)
+        name = None if i % 11 == 3 else rng.choice(
+            ["alpha", "beta", "gämma", "δέλτα", "", "zz"]
+        ) + str(rng.randrange(50))
+        v = None if i % 13 == 5 else rng.uniform(-1e6, 1e6)
+        if i == 250:
+            v = float("nan")
+        rows.append((k, name, v))
+    return rows
+
+
+def _conformance_sidecars(spark, root: str) -> dict[str, dict]:
+    """The same seeded rows sealed into one file by each of the four
+    sidecar producers; returns producer -> parsed sidecar."""
+    from fourmc_spark.operators.maintenance import (
+        analyze_bloom, analyze_stats, analyze_stats_proto, compact_blocks,
+    )
+
+    df = spark.createDataFrame(
+        _conformance_rows(), "k bigint, name string, v double"
+    )
+    lines = df.select(F.to_json(F.struct("k", "name", "v")).alias("value"))
+
+    def sink(d, n_files):
+        (lines.repartition(n_files).write.format("fourmc")
+         .option("codec", "zstd").option("statsschema", _DDL)
+         .option("bloomcolumns", "k,name").option("bloombits", 4096)
+         .option("bloomk", 5).mode("overwrite").save(d))
+
+    sink(f"{root}/sink", 1)
+    plain = f"{root}/analyze"
+    (lines.coalesce(1).write.format("fourmc").option("codec", "zstd")
+     .mode("overwrite").save(plain))
+    analyze_stats(spark, plain, _DDL)
+    analyze_bloom(spark, plain, _DDL, ["k", "name"], bits=4096, k=5)
+    proto = f"{root}/proto"
+    (df.coalesce(1).write.format("fourmcproto")
+     .option("fields", _json.dumps(_CONF_FIELDS)).option("codec", "zstd")
+     .mode("overwrite").save(proto))
+    from fourmc_spark.format.protobuf import ProtoField
+
+    analyze_stats_proto(
+        spark, proto,
+        fields=tuple(ProtoField(f["number"], f["name"], f["type"])
+                     for f in _CONF_FIELDS),
+        bloom_columns=["k", "name"], bloom_bits=4096, bloom_k=5,
+    )
+    sink(f"{root}/sink3", 3)
+    compact_blocks(spark, f"{root}/sink3", f"{root}/compact",
+                   target_bytes=1 << 40)
+    out = {}
+    for name in ("sink", "analyze", "proto", "compact"):
+        scs = _glob.glob(f"{root}/{name}/*.stats.json")
+        assert len(scs) == 1, (name, scs)
+        with open(scs[0]) as f:
+            out[name] = _json.load(f)
+    return out
+
+
+def test_sidecar_producers_agree(spark, tmp_path):
+    """Every sidecar producer seals the same rows, file-tier zone map
+    and file-tier blooms for the same data: the sink's write-time
+    stats, analyze_stats + analyze_bloom, analyze_stats_proto, and the
+    compaction carry over three sink files. A drift between any two
+    would prune one tree differently from another holding the same
+    rows."""
+    metas = _conformance_sidecars(spark, str(tmp_path))
+    # NaN never equals itself: compare the canonical JSON text
+    def canon(m):
+        return _json.dumps(
+            {f: m[f] for f in ("rows", "columns", "bloom")}, sort_keys=True
+        )
+
+    want = canon(metas["sink"])
+    for name, meta in metas.items():
+        assert canon(meta) == want, name
+    cols = metas["sink"]["columns"]
+    assert metas["sink"]["rows"] == 500
+    assert cols["v"]["max"] != cols["v"]["max"]  # NaN is the greatest
+    assert set(metas["sink"]["bloom"]) == {"k", "name"}

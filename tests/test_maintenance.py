@@ -120,6 +120,14 @@ def _mk_text_tree(d: str, n: int = 12, codec: str = "zstd") -> list[bytes]:
     return contents
 
 
+def _ref_cli_verifies(*args: str) -> None:
+    """External check, run last: the reference CLI must accept the file.
+    Without the binary the test reports a skip, never a silent pass."""
+    if not os.path.exists(REF_CLI):
+        pytest.skip("reference CLI absent: external verification not run")
+    assert subprocess.run([REF_CLI, *args], capture_output=True).returncode == 0
+
+
 def test_compact_text_raw_copy_roundtrip(spark, tmp_path):
     src = str(tmp_path / "c_in")
     out = str(tmp_path / "c_out")
@@ -136,16 +144,14 @@ def test_compact_text_raw_copy_roundtrip(spark, tmp_path):
         c if c.endswith(b"\n") else c + b"\n" for c in contents
     )
     assert decompress_file(outs[0]) == want
-    # sealed-container proof: the reference prebuilt CLI verifies it
-    rc = subprocess.run([REF_CLI, "-f", "-z", "-t", outs[0]],
-                        capture_output=True).returncode
-    assert rc == 0
     # and Spark reads the compacted tree to the same rows
     a = sorted(r["value"] for r in
                spark.read.format("fourmc").load(src).collect())
     b = sorted(r["value"] for r in
                spark.read.format("fourmc").load(out).collect())
     assert a == b
+    # sealed-container proof: the reference prebuilt CLI verifies it
+    _ref_cli_verifies("-f", "-z", "-t", outs[0])
 
 
 def test_compact_respects_target_bytes(spark, tmp_path):
@@ -187,9 +193,7 @@ def test_compact_recompress_conversion(spark, tmp_path):
     assert len(outs) == 1 and stats["outputs"] == 1
     want = b"".join(c if c.endswith(b"\n") else c + b"\n" for c in contents)
     assert decompress_file(outs[0]) == want
-    rc = subprocess.run([REF_CLI, "-f", "-t", outs[0]],
-                        capture_output=True).returncode
-    assert rc == 0
+    _ref_cli_verifies("-f", "-t", outs[0])
 
 
 def test_compact_in_place_rejected(spark, tmp_path):
@@ -308,8 +312,8 @@ def test_compact_carries_zone_maps(spark, tmp_path):
     import json as _json
 
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.sources.datasource import (
-        STATS_SUFFIX, _load_zone_sidecar,
+    from fourmc_spark.format.sidecar import (
+        STATS_SUFFIX, load as _load_zone_sidecar,
     )
 
     src = str(tmp_path / "zc_in")
@@ -349,7 +353,7 @@ def test_carried_stats_never_prune_the_seam_line(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.sources.datasource import _load_zone_sidecar
+    from fourmc_spark.format.sidecar import load as _load_zone_sidecar
 
     src = str(tmp_path / "seam_in")
     out = str(tmp_path / "seam_out")
@@ -378,7 +382,7 @@ def test_carried_stats_never_prune_the_seam_line(spark, tmp_path):
 
 
 def test_compact_without_input_sidecars_carries_nothing(spark, tmp_path):
-    from fourmc_spark.sources.datasource import _load_zone_sidecar
+    from fourmc_spark.format.sidecar import load as _load_zone_sidecar
 
     src = str(tmp_path / "nc_in")
     out = str(tmp_path / "nc_out")
@@ -393,7 +397,7 @@ def test_compact_carry_disabled_when_glue_possible(spark, tmp_path):
     across the seam; carried block stats would be too narrow for the
     block owning the glued line, so carry must shut off entirely."""
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.sources.datasource import _load_zone_sidecar
+    from fourmc_spark.format.sidecar import load as _load_zone_sidecar
 
     src = str(tmp_path / "glue_in")
     out = str(tmp_path / "glue_out")
@@ -426,7 +430,7 @@ def test_compact_rerun_drops_stale_sidecar(spark, tmp_path):
     carrying run — the size check alone could accept it on a size
     collision and then prune against the wrong data."""
     from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.sources.datasource import _load_zone_sidecar
+    from fourmc_spark.format.sidecar import load as _load_zone_sidecar
 
     src = str(tmp_path / "rerun_in")
     out = str(tmp_path / "rerun_out")
@@ -456,7 +460,7 @@ def test_carried_merge_skips_incomparable_columns(tmp_path):
     skipped (conservative) while comparable columns survive."""
     import json as _json
 
-    from fourmc_spark.operators.maintenance import _write_carried_sidecar
+    from fourmc_spark.format.sidecar import merge as _write_carried_sidecar
     from fourmc_spark.sources.datasource import STATS_SUFFIX
 
     outf = str(tmp_path / "m.4mz")

@@ -289,10 +289,13 @@ def test_bloom_carry_or_merge_preserves_membership(sets):
     import base64
 
     from fourmc_spark.format.native import xxh64
-    from fourmc_spark.operators.maintenance import _merge_carried_blooms
-    from fourmc_spark.sources.datasource import (
-        BLOOM_SEED, _bloom_file_pruned, bloom_positions, seal_bloom_spec,
+    from fourmc_spark.format.sidecar import (
+        BLOOM_SEED, bloom_positions, seal_bloom_spec,
     )
+    from fourmc_spark.format.sidecar import (
+        merge_blooms as _merge_carried_blooms,
+    )
+    from fourmc_spark.sources.datasource import _bloom_file_pruned
 
     bits, k = 1 << 10, 3
     metas = []
@@ -326,3 +329,253 @@ def test_next_prefix_is_exclusive_upper_bound(v):
     for suffix in ("", "a", "\x00", "\U0010ffff" * 2, v):
         assert v + suffix < hi
     assert v < hi
+
+
+# ---------------------------------------------------------------------------
+# fail-closed sidecar loading: a hostile sidecar that still matches the
+# file size may only cost pruning, never a row
+# ---------------------------------------------------------------------------
+
+_FC_DDL = "k bigint, name string, v double"
+_FC_LINE = 64  # fixed line width: blocks of 10 lines own exactly those
+
+
+def _fc_rows() -> list[tuple]:
+    rows = []
+    for i in range(40):
+        k = None if i in (3, 5) else i * 7919 - 150_000
+        name = None if i % 7 == 2 else f"n{i % 6}"
+        v = float("nan") if i == 17 else (None if i % 8 == 5 else i / 4)
+        rows.append((k, name, v))
+    return rows
+
+
+_FC_STATE: dict = {}
+
+
+def _fc_fixture(tmp_path_factory):
+    """One 4-block NDJSON file and the valid sidecar of it (zone maps,
+    blocks, and both bloom tiers), built once."""
+    if _FC_STATE:
+        return _FC_STATE
+    import json
+
+    import pyarrow as pa
+
+    from fourmc_spark.format import sidecar
+    from fourmc_spark.format.reader import scan_file_info
+    from fourmc_spark.format.writer import write_file
+
+    d = str(tmp_path_factory.mktemp("failclosed"))
+    path = os.path.join(d, "a.4mz")
+    rows = _fc_rows()
+    lines = b"".join(
+        json.dumps(dict(zip(("k", "name", "v"), r))).ljust(_FC_LINE - 1)
+        .encode() + b"\n"
+        for r in rows
+    )
+    write_file(path, lines, codec="zstd", block_size=10 * _FC_LINE)
+    offsets = scan_file_info(path)[2]
+    assert len(offsets) == 4
+    types = {"k": pa.int64(), "name": pa.string(), "v": pa.float64()}
+    bits, k = 1024, 3
+    file_span, spans, blooms = sidecar.Span(types), [], {}
+    block_pos: list[dict] = []
+    for b, off in enumerate(offsets):
+        own = rows[b * 10:(b + 1) * 10]
+        span = sidecar.Span(types)
+        span.add({c: pa.array([r[i] for r in own], t)
+                  for i, (c, t) in enumerate(types.items())}, len(own))
+        file_span.merge(span)
+        spans.append(span.block(off))
+        block_pos.append({})
+        for i, c in ((0, "k"), (1, "name")):
+            pos = {p for r in own if r[i] is not None
+                   for p in sidecar.text_positions(str(r[i]), k, bits)}
+            block_pos[-1][c] = pos
+            blooms.setdefault(c, set()).update(pos)
+    fams = {"k": "int", "name": "str"}
+    sidecar.write(
+        path, rows=len(rows), columns=file_span.columns(), blocks=spans,
+        bloom={c: sidecar.seal_bloom_spec(sidecar.pack_bits(p, bits), bits,
+                                          k, fams[c])
+               for c, p in blooms.items()},
+        bloom_blocks=sidecar.seal_bloom_blocks_header(bits, k, fams, [
+            {"o": off, "c": {c: sidecar.b64(sidecar.pack_bits(p, bits))
+                             for c, p in block_pos[b].items()}}
+            for b, off in enumerate(offsets)
+        ]),
+    )
+    with open(sidecar.path_for(path)) as f:
+        valid = json.load(f)
+    _FC_STATE.update(dir=d, path=path, offsets=offsets, rows=rows,
+                     valid=valid)
+    return _FC_STATE
+
+
+def _fc_kept_blocks(state, meta, filters) -> set:
+    """Block offsets the planner keeps under *meta* as the sidecar."""
+    import json
+
+    from pyspark.sql.datasource import CaseInsensitiveDict
+
+    from fourmc_spark.format import sidecar
+    from fourmc_spark.format.core import HEADER_SIZE
+    from fourmc_spark.sources.datasource import (
+        FourMcDataSourceReader, _parse_flat_ddl,
+    )
+
+    with open(sidecar.path_for(state["path"]), "w") as f:
+        json.dump(meta, f)
+    sidecar._SIDECAR_CACHE.clear()  # same-tick rewrites: never serve stale
+    rd = FourMcDataSourceReader(
+        CaseInsensitiveDict({"path": state["dir"], "jsonschema": _FC_DDL}),
+        _parse_flat_ddl(_FC_DDL),
+    )
+    list(rd.pushFilters(filters))
+    parts = [p for p in rd.partitions() if p.path]
+    return {
+        o for o in state["offsets"]
+        if any(p.start <= max(o, HEADER_SIZE) < p.end for p in parts)
+    }
+
+
+def _fc_probes(row) -> list[list]:
+    """Pushed-filter conjunctions that the row satisfies."""
+    from pyspark.sql.datasource import (
+        EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull,
+        LessThan, LessThanOrEqual, StringStartsWith,
+    )
+
+    k, name, v = row
+    out = []
+    if k is None:
+        out.append([IsNull(("k",))])
+    else:
+        out += [[EqualTo(("k",), k)], [In(("k",), (k, 1))],
+                [GreaterThanOrEqual(("k",), k), LessThanOrEqual(("k",), k)],
+                [GreaterThan(("k",), k - 1)], [LessThan(("k",), k + 1)]]
+    if name is None:
+        out.append([IsNull(("name",))])
+    else:
+        out += [[EqualTo(("name",), name)],
+                [StringStartsWith(("name",), name[:1])]]
+    if v is None:
+        out.append([IsNull(("v",))])
+    else:
+        # Spark orders NaN above every double: it satisfies v >= 0
+        out += [[IsNotNull(("v",))],
+                [GreaterThanOrEqual(("v",), 0.0 if v != v else v)]]
+    return out
+
+
+def _jtype(x) -> str:
+    if isinstance(x, bool):
+        return "bool"
+    if isinstance(x, (int, float)):
+        return "num"
+    return {str: "str", type(None): "null", list: "list",
+            dict: "dict"}[type(x)]
+
+
+def _nodes(x, path=()):
+    yield path
+    if isinstance(x, dict):
+        for key, v in x.items():
+            yield from _nodes(v, path + (key,))
+    elif isinstance(x, list):
+        for i, v in enumerate(x):
+            yield from _nodes(v, path + (i,))
+
+
+#: one value of every JSON type: a mutation swaps a node for one whose
+#: type differs from the node's own
+_WRONG = [None, False, True, "", "7", 0, 1.5, [], {}]
+
+
+@st.composite
+def _hostile(draw, valid):
+    """One type-breaking mutation of the valid sidecar: a node replaced
+    by a value of another JSON type, a node deleted, the whole document
+    replaced, or a bloom spec given a wrong bitmap length, family or k.
+    Same-type value edits are excluded: those make a lying sidecar, not
+    a malformed one."""
+    import copy
+
+    meta = copy.deepcopy(valid)
+    # "stat" is "replace" on a min/max/nulls value, drawn more often
+    kind = draw(st.sampled_from(
+        ["stat", "stat", "replace", "delete", "top", "bloom"]
+    ))
+    if kind == "top":
+        return draw(st.sampled_from([w for w in _WRONG
+                                     if not isinstance(w, dict)]))
+    if kind == "bloom":
+        where = draw(st.sampled_from(["k", "name", "blocks"]))
+        spec = (meta["bloom_blocks"] if where == "blocks"
+                else meta["bloom"][where])
+        fault = draw(st.sampled_from(["length", "fam", "k"]))
+        if fault == "length":
+            spec["bits"] += draw(st.sampled_from([-16, -8, 8, 64]))
+        elif fault == "fam":
+            if where == "blocks":
+                spec["fam"]["k"] = "str"
+            else:
+                spec["fam"] = {"int": "str", "str": "int"}[spec["fam"]]
+        else:
+            spec["k"] = draw(st.sampled_from([0, -1, 65, 1.5, "3", True,
+                                              None]))
+        return meta
+    paths = [p for p in _nodes(meta) if p]
+    if kind == "stat":
+        paths = [p for p in paths if (p[0], len(p)) in
+                 (("columns", 3), ("blocks", 5))]
+    path = draw(st.sampled_from(paths))
+    parent = meta
+    for key in path[:-1]:
+        parent = parent[key]
+    if kind == "delete":
+        del parent[path[-1]]
+    else:
+        old = _jtype(parent[path[-1]])
+        parent[path[-1]] = draw(
+            st.sampled_from([w for w in _WRONG if _jtype(w) != old])
+        )
+    return meta
+
+
+@given(data=st.data())
+@settings(max_examples=200, deadline=None)
+def test_hostile_sidecar_keeps_matching_blocks(tmp_path_factory, data):
+    """A sidecar that matches the file's size but is malformed, carries
+    min/max of the wrong type, or a bloom spec with the wrong bitmap
+    length, family or k: the planner still keeps every block owning a
+    row that satisfies the pushed filters."""
+    state = _fc_fixture(tmp_path_factory)
+    meta = data.draw(_hostile(state["valid"]))
+    for i, row in enumerate(state["rows"]):
+        for filters in _fc_probes(row):
+            assert state["offsets"][i // 10] in _fc_kept_blocks(
+                state, meta, filters
+            ), (row, filters)
+
+
+def test_valid_fixture_sidecar_prunes(tmp_path_factory):
+    """The fail-closed property has teeth: under the valid sidecar each
+    tier prunes an absent value, and no probe of a real row loses its
+    block."""
+    from pyspark.sql.datasource import EqualTo, GreaterThan, IsNull
+
+    state = _fc_fixture(tmp_path_factory)
+    valid = state["valid"]
+    assert _fc_kept_blocks(state, valid, [EqualTo(("k",), 7)]) == set()
+    assert _fc_kept_blocks(state, valid, [GreaterThan(("k",), 10**9)]) == set()
+    assert len(_fc_kept_blocks(
+        state, valid, [GreaterThan(("k",), 100_000)])) == 1
+    assert len(_fc_kept_blocks(state, valid, [IsNull(("k",))])) < 4
+    assert _fc_kept_blocks(state, valid, [EqualTo(("name",), "zz")]) == set()
+    for i, row in enumerate(state["rows"]):
+        for filters in _fc_probes(row):
+            assert state["offsets"][i // 10] in _fc_kept_blocks(
+                state, valid, filters
+            ), (row, filters)

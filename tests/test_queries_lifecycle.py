@@ -67,6 +67,20 @@ def test_det_range_shuffle_is_range_disjoint(spark):
         .collect()
     )
     assert again == spans
+    # a span above 2^53: keys either side of every bucket boundary land
+    # in their exact integer bucket, so the ranges stay disjoint
+    n, lo, hi = 3, 0, 2**54
+    span = hi - lo + 1
+    edges = [-(-b * span // n) for b in range(1, n)]
+    keys = sorted({lo, hi} | {e + d for e in edges for d in (-1, 0)})
+    got = {
+        r["k"]: r["p"]
+        for r in _det_range_shuffle(
+            spark.createDataFrame([(k,) for k in keys], "k long"),
+            n, F.col("k"), lo, hi,
+        ).select("k", F.spark_partition_id().alias("p")).collect()
+    }
+    assert got == {k: (k - lo) * n // span for k in keys}
 
 
 def test_parquet_col_minmax_reads_footer(tmp_path, spark, sf_dir):
@@ -86,6 +100,29 @@ def test_parquet_col_minmax_reads_footer(tmp_path, spark, sf_dir):
     # unknown column / bad path fall back safely
     assert _parquet_col_minmax(f"{sf_dir}/events.parquet", "nope") is None
     assert _parquet_col_minmax(str(tmp_path / "missing.parquet"), "x") is None
+
+
+def test_parquet_col_minmax_non_int_stats_fall_back(tmp_path):
+    """Float and string statistics over several row groups are out of
+    scope: None (the sampled fallback), never a TypeError."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fourmc_spark.queries import _parquet_col_minmax
+
+    p = str(tmp_path / "multi_rg.parquet")
+    pq.write_table(
+        pa.table({
+            "i": list(range(100)),
+            "f": [x / 4 for x in range(100)],
+            "s": [f"s{x:03d}" for x in range(100)],
+        }),
+        p, row_group_size=25,
+    )
+    assert pq.ParquetFile(p).metadata.num_row_groups == 4
+    assert _parquet_col_minmax(p, "f") is None
+    assert _parquet_col_minmax(p, "s") is None
+    assert _parquet_col_minmax(p, "i") == (0, 99)
 
 
 def test_range_partition_fixture_falls_back_without_stats(spark, tmp_path):
