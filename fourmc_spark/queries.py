@@ -14,11 +14,15 @@ the physical plans Catalyst should pick at 100 TB (see PLANS.md).
 
 from __future__ import annotations
 
-from typing import Callable
+import json
+from contextlib import contextmanager
+from typing import Callable, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from fourmc_spark.format import sidecar
+from fourmc_spark.format.protobuf import ProtoField
 from fourmc_spark.functions import (
     HASH_PRIME,
     minhash_params,
@@ -31,6 +35,7 @@ from fourmc_spark.operators import (
     dedup,
     graph,
     joins,
+    maintenance,
     multimodal,
     sampling,
     similarity,
@@ -2550,12 +2555,13 @@ def _range_partition_fixture(
                               mm[0], mm[1])
 
 
-@query(
-    "stream_tumbling_hourly",
-    """SELECT date_trunc('hour', ts) AS win_start, event_type,
+# the streaming-window oracle, shared with the 4mc stream-source queries
+_TUMBLING_ORACLE = """SELECT date_trunc('hour', ts) AS win_start, event_type,
               CAST(count(*) AS BIGINT) AS cnt, round(sum(value), 2) AS sum_value
-       FROM {EV} GROUP BY 1, 2 ORDER BY 1, 2""",
-)
+       FROM {EV} GROUP BY 1, 2 ORDER BY 1, 2"""
+
+
+@query("stream_tumbling_hourly", _TUMBLING_ORACLE)
 def stream_tumbling_q(spark, sf):
     from fourmc_spark.streaming import read_events_stream, tumbling_counts
 
@@ -2828,420 +2834,354 @@ def stream_sessionize_q(spark, sf):
             spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
-@query(
-    "proto_4mc_roundtrip",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
+# =========================================================================
+# Sealed-log lifecycle band: the sql_4mc_*, proto_4mc_*, stream_4mc_*,
+# maintenance_compact_* and stream_proto_sink queries put the 4mc surface
+# under the oracle gate end to end. Each writes the events table as a
+# sealed 4mc/4mz tree in a scratch dir, seals its sidecars (ANALYZE, sink
+# statsschema, or bloom), may compact it, plants a poison file, and reads
+# it back through a pruned scan; the oracle states the same result over
+# the plain events table. The cases of that shape are rows over
+# ``lifecycle``; the bespoke constructions call the same helpers.
+# =========================================================================
+
+_EV_COLS = ("event_id", "user_id", "event_type", "value")
+_EV_DDL = "event_id bigint, user_id bigint, event_type string, value double"
+_EV_TS_DDL = "ts timestamp, " + _EV_DDL
+_PROTO_SCHEMA = tuple(
+    ProtoField(i, c, t)
+    for i, (c, t) in enumerate(
+        zip(_EV_COLS, ("int64", "int64", "string", "double")), 1
+    )
+)
+_PROTO_FIELDS = json.dumps(
+    [{"number": f.number, "name": f.name, "type": f.type}
+     for f in _PROTO_SCHEMA]
+)
+_SINK = {"codec": "zstd", "level": "medium"}
+_BLOOM_BITS, _BLOOM_K = 1 << 18, 6
+# poison sidecars: a zone range disjoint from every pushed event_id
+# predicate, and an all-zero event_id bloom (every probe provably absent)
+_ID_ZONE = {
+    "zone": {"event_id": {"min": 10**9, "max": 2 * 10**9, "nulls": 0}}
+}
+_ID_BLOOM = {"bloom": ["event_id"]}
+
+
+def _summary_oracle(where: str = "TRUE") -> str:
+    return f"""SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
               CAST(sum(user_id) AS BIGINT) AS user_sum,
               round(sum(value), 2) AS value_sum,
               CAST(min(event_id) AS BIGINT) AS min_event,
               CAST(max(event_id) AS BIGINT) AS max_event
-       FROM {EV} GROUP BY event_type ORDER BY event_type""",
-)
-def proto_4mc_roundtrip_q(spark, sf):
-    # The PROTOBUF surface (S8/K4) through the oracle gate — the proto
-    # twin of stream_4mc_tumbling: events are wire-encoded as
-    # ElephantBird block-framed protobuf records inside 4mz via the
-    # fourmcproto sink, read back through the fourmcproto scan, and
-    # aggregated; the result must equal the batch oracle exactly, so a
-    # varint/zigzag/field-framing bug anywhere in the round trip breaks
-    # the hash match.
-    import json as _json
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    fields = _json.dumps(
-        [
-            {"number": 1, "name": "event_id", "type": "int64"},
-            {"number": 2, "name": "user_id", "type": "int64"},
-            {"number": 3, "name": "event_type", "type": "string"},
-            {"number": 4, "name": "value", "type": "double"},
-        ]
-    )
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-proto-rt-")
-    try:
-        (
-            ev.write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+       FROM {{EV}} WHERE {where}
+       GROUP BY event_type ORDER BY event_type"""
 
 
-@query(
-    "proto_4mc_zonemap_scan",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 1500 AND 3099
-       GROUP BY event_type ORDER BY event_type""",
-)
-def proto_4mc_zonemap_scan_q(spark, sf):
-    # Zone maps for the PROTOBUF typed scan (round 10): before this,
-    # the proto reader got partition/path pruning but a range predicate
-    # on a payload int64 (the reference's `birthDate` shape,
-    # user.proto:11) scanned every file. analyze_stats_proto streams
-    # each file's EB records once (one task per file, sidecar written
-    # executor-side) and records the same two-tier sidecar the text
-    # scan uses, keyed by the sync-marker-owner block offset; the
-    # shared pushFilters accepts value constraints on the declared
-    # scalar payload fields. Same poison proof as the text twins: a
-    # garbage container with a valid out-of-range sidecar is planted —
-    # green iff file pruning engaged before any footer read.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
-
-    register_fourmc(spark)
-    field_list = [
-        {"number": 1, "name": "event_id", "type": "int64"},
-        {"number": 2, "name": "user_id", "type": "int64"},
-        {"number": 3, "name": "event_type", "type": "string"},
-        {"number": 4, "name": "value", "type": "double"},
-    ]
-    fields = _json.dumps(field_list)
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-proto-zm-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        from fourmc_spark.format.protobuf import ProtoField
-
-        analyze_stats_proto(
-            spark, d,
-            fields=tuple(
-                ProtoField(f["number"], f["name"], f["type"])
-                for f in field_list
-            ),
-        )
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-            .where(F.col("event_id").between(1500, 3099))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@query(
-    "proto_4mc_bloom_scan",
-    """SELECT CAST(event_id AS BIGINT) AS event_id,
+def _points_oracle(ids) -> str:
+    return f"""SELECT CAST(event_id AS BIGINT) AS event_id,
               CAST(user_id AS BIGINT) AS user_id,
               event_type, value
-       FROM events WHERE event_id IN (9, 230, 615)
-       ORDER BY event_id""",
-)
-def proto_4mc_bloom_scan_q(spark, sf):
-    # Bloom sidecars on the PROTOBUF typed scan (round 10): events are
-    # written UNCLUSTERED (hash repartition — every file's event_id
-    # span covers the domain, so the proto zone tier keeps all of
-    # them), and analyze_stats_proto seals per-file bloom bitmaps IN
-    # THE SAME decode pass (bloom_columns: xxh64(str(value)) seed 42 —
-    # byte-identical to the NDJSON tier's JVM CAST-AS-STRING contract,
-    # so the shared _bloom_file_pruned probe needs no proto-specific
-    # path). The reader's pushFilters turns the IN-list into point
-    # probes and drops files whose bloom proves all ids absent. Poison
-    # proof: a garbage container with an all-zero bloom under the real
-    # contract tag — green iff the probe pruned it before any footer
-    # read.
-    import json as _json
+       FROM events WHERE event_id IN ({', '.join(map(str, ids))})
+       ORDER BY event_id"""
+
+
+def _summary(df: DataFrame) -> DataFrame:
+    return (
+        df.groupBy("event_type")
+        .agg(
+            F.count("*").cast("long").alias("cnt"),
+            F.sum("user_id").cast("long").alias("user_sum"),
+            F.round(F.sum("value"), 2).alias("value_sum"),
+            F.min("event_id").cast("long").alias("min_event"),
+            F.max("event_id").cast("long").alias("max_event"),
+        )
+        .orderBy("event_type")
+    )
+
+
+def _points(df: DataFrame, ids) -> DataFrame:
+    return (
+        df.where(F.col("event_id").isin(list(ids)))
+        .select(*_EV_COLS)
+        .orderBy("event_id")
+    )
+
+
+@contextmanager
+def _scratch(spark):
+    """A scratch dir, removed on exit. Registers the fourmc sources
+    first (idempotent — the caller's session may not have gone through
+    get_spark)."""
+    import shutil
+    import tempfile
+
+    from fourmc_spark.session import register_fourmc
+
+    register_fourmc(spark)
+    d = tempfile.mkdtemp(prefix="fourmc-lifecycle-")
+    try:
+        yield d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def _events(df: DataFrame, ddl: str = _EV_DDL) -> DataFrame:
+    """The events columns ``ddl`` names. ts becomes text at FULL
+    microsecond precision (to_json would render millis), so from_json
+    and the typed scan rebuild the exact instants."""
+    return df.select(*[
+        F.date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS").alias(c)
+        if c == "ts" else c
+        for c in (f.split()[0] for f in ddl.split(","))
+    ])
+
+
+def _parsed(df: DataFrame, ddl: str) -> DataFrame:
+    return df.select(F.from_json("value", ddl).alias("_r")).select("_r.*")
+
+
+def _write(df: DataFrame, path: str, fmt: str = "fourmc", **options) -> None:
+    """Seal ``df`` as a fourmc/fourmcproto tree (zstd, level medium
+    unless overridden)."""
+    df.write.format(fmt).options(**{**_SINK, **options}).mode(
+        "overwrite"
+    ).save(path)
+
+
+def _drain(sdf: DataFrame, root: str, fmt: str = "fourmc", **options) -> str:
+    """Drain the stream ``sdf`` (availableNow) through the
+    fourmc/fourmcproto stream sink into ``root``/out; returns that path.
+    One sealed file per task per micro-batch, no driver data path."""
+    out = f"{root}/out"
+    (
+        sdf.writeStream.format(fmt).options(**{**_SINK, **options})
+        .option("path", out).option("checkpointLocation", f"{root}/ckpt")
+        .trigger(availableNow=True).start().awaitTermination()
+    )
+    return out
+
+
+def _compact(spark, src: str, out: str, parts: int) -> str:
+    """Block-copy compaction of ``src`` into about ``parts`` files at
+    ``out``. When every input is sealed with a sidecar, every output
+    must carry one: the pruned read over ``out`` proves the carried
+    sidecars only if they exist (a planted poison has its own either
+    way), so a dropped carry fails loudly here."""
+    import glob
     import os
-    import shutil
-    import tempfile
 
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
-
-    register_fourmc(spark)
-    field_list = [
-        {"number": 1, "name": "event_id", "type": "int64"},
-        {"number": 2, "name": "user_id", "type": "int64"},
-        {"number": 3, "name": "event_type", "type": "string"},
-        {"number": 4, "name": "value", "type": "double"},
-    ]
-    fields = _json.dumps(field_list)
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
+    files = glob.glob(f"{src}/part-*.4mz")
+    sealed = all(os.path.exists(sidecar.path_for(f)) for f in files)
+    stats = maintenance.compact_blocks(
+        spark, src, out,
+        target_bytes=max(1, sum(map(os.path.getsize, files)) // parts),
     )
-    bits, k = 1 << 18, 6
-    d = tempfile.mkdtemp(prefix="fourmc-proto-bloom-")
-    try:
-        (
-            ev.repartition(6)  # UNCLUSTERED: the zone tier keeps every file
-            .write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
+    if sealed and stats["stats_carried"] != stats["outputs"]:
+        raise RuntimeError(
+            f"compaction dropped the sealed inputs' sidecars: {stats}"
         )
-        from fourmc_spark.format.protobuf import ProtoField
-
-        analyze_stats_proto(
-            spark, d,
-            fields=tuple(
-                ProtoField(f["number"], f["name"], f["type"])
-                for f in field_list
-            ),
-            bloom_columns=["event_id"], bloom_bits=bits, bloom_k=k,
-        )
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-            .where(F.col("event_id").isin([9, 230, 615]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(back)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return out
 
 
-@query(
-    "proto_4mc_zonemap_blocks_scan",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 900 AND 2499
-       GROUP BY event_type ORDER BY event_type""",
-)
-def proto_4mc_zonemap_blocks_scan_q(spark, sf):
-    # BLOCK tier of the proto zone maps (round 10; proto twin of
-    # sql_4mc_zonemap_blocks_scan): events sorted by event_id into 2
-    # sealed EB-protobuf files with 8 KiB container blocks and 25
-    # records per EB block, so the range's selectivity lives INSIDE
-    # files; analyze_stats_proto keys per-block min/max by the block in
-    # which each record's sync marker STARTS — the exact ownership rule
-    # the split reader enforces — and the planner drops non-matching
-    # blocks within kept files. The hash oracle is unforgiving about
-    # the two ownership seams: an EB block SPANNING into a dropped
-    # container block must still complete (split spillover), and
-    # records OWNED by a dropped block must not survive via their
-    # spill bytes.
-    import json as _json
-    import shutil
-    import tempfile
+def _plant_poison(d: str, zone: dict | None = None,
+                  bloom: list | None = None) -> None:
+    """Plant garbage bytes (not a 4mc container: opening them throws
+    BadHeaderError) under a valid, size-matching sidecar that excludes
+    them: ``zone`` gives its column stats, ``bloom`` the columns whose
+    bitmap is all zero. A read over ``d`` succeeds iff planning pruned
+    the file before any footer read."""
+    import os
 
-    from fourmc_spark.operators.maintenance import analyze_stats_proto
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    field_list = [
-        {"number": 1, "name": "event_id", "type": "int64"},
-        {"number": 2, "name": "user_id", "type": "int64"},
-        {"number": 3, "name": "event_type", "type": "string"},
-        {"number": 4, "name": "value", "type": "double"},
-    ]
-    fields = _json.dumps(field_list)
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
+    p = os.path.join(d, "poison.4mz")
+    with open(p, "wb") as f:
+        f.write(b"NOT-A-4MC-CONTAINER" * 16)
+    empty = sidecar.seal_bloom_spec(
+        bytes(_BLOOM_BITS // 8), _BLOOM_BITS, _BLOOM_K, "int"
     )
-    d = tempfile.mkdtemp(prefix="fourmc-proto-zmb-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 2, "event_id", f"{sf}/events.parquet"
-            )
-            .sortWithinPartitions("event_id")
-            .write.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 8 * 1024)
-            .option("recordsperblock", 25)
-            .mode("overwrite").save(d)
-        )
-        from fourmc_spark.format.protobuf import ProtoField
-
-        analyze_stats_proto(
-            spark, d,
-            fields=tuple(
-                ProtoField(f["number"], f["name"], f["type"])
-                for f in field_list
-            ),
-            blocks=True,
-        )
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(d)
-            .where(F.col("event_id").between(900, 2499))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    sidecar.write(p, rows=1, columns=zone,
+                  bloom=bloom and {c: empty for c in bloom})
 
 
-@query(
-    "stream_proto_sink",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM {EV} GROUP BY event_type ORDER BY event_type""",
-)
-def stream_proto_sink_q(spark, sf):
-    # K4 STREAMING twin under the oracle gate (round 8): events stream
-    # from parquet through writeStream.format("fourmcproto") — rows
-    # wire-encoded as ElephantBird block-framed protobuf inside sealed
-    # .4mz files, with the fourmc stream sink's batch-replay-idempotent
-    # deterministic commit names — then batch-read back through the
-    # fourmcproto scan and aggregated. Equality with the batch oracle
-    # certifies the streaming proto pipeline sealed every row exactly
-    # once AND every varint/zigzag/EB frame survived; the proto twin of
-    # stream_4mc_sink the way proto_4mc_roundtrip twins
-    # stream_4mc_tumbling. Scale shape: one sealed file per task per
-    # micro-batch, no driver data path.
-    import json as _json
-    import shutil
-    import tempfile
+class _Model(NamedTuple):
+    """A record model of the sealed events: the source/sink format, the
+    columns (as DDL), how typed rows become sink rows, and the options
+    the sink and the typed scan need."""
 
-    from fourmc_spark.session import register_fourmc
+    fmt: str
+    ddl: str
+    encode: Callable[[DataFrame], DataFrame]
+    sink: dict
+    scan: dict
 
-    register_fourmc(spark)
-    fields = _json.dumps(
-        [
-            {"number": 1, "name": "event_id", "type": "int64"},
-            {"number": 2, "name": "user_id", "type": "int64"},
-            {"number": 3, "name": "event_type", "type": "string"},
-            {"number": 4, "name": "value", "type": "double"},
-        ]
+
+def _lines(render, ddl: str, schema_option: str) -> _Model:
+    # text lines: ``render`` (to_json / to_csv) turns each row into one
+    return _Model(
+        "fourmc", ddl,
+        lambda df: df.select(render(F.struct(*df.columns)).alias("value")),
+        {}, {schema_option: ddl},
     )
-    root = tempfile.mkdtemp(prefix="fourmc-proto-stream-")
-    out_dir, ckpt = f"{root}/out", f"{root}/ckpt"
-    try:
-        from fourmc_spark.streaming import read_events_stream
 
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            "event_id", "user_id", "event_type", "value"
-        )
-        q = (
-            sdf.writeStream.format("fourmcproto")
-            .option("fields", fields)
-            .option("codec", "zstd").option("level", "medium")
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        back = (
-            spark.read.format("fourmcproto")
-            .option("fields", fields)
-            .load(out_dir)
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+_NDJSON = _lines(F.to_json, _EV_DDL, "jsonschema")
+_NDJSON_TS = _lines(F.to_json, _EV_TS_DDL, "jsonschema")
+_CSV = _lines(F.to_csv, _EV_DDL, "csvschema")
+# ElephantBird block-framed protobuf records
+_PROTO = _Model("fourmcproto", _EV_DDL, lambda df: df,
+                {"fields": _PROTO_FIELDS}, {"fields": _PROTO_FIELDS})
+
+
+def _batch(layout):
+    """Batch fixture: the model's events, laid out by
+    ``layout(df, events_parquet_path)``, sealed at ``root``/data."""
+    def fixture(spark, sf, model, root, **options):
+        path = f"{root}/data"
+        df = layout(_events(_t(spark, sf, "events"), model.ddl),
+                    f"{sf}/events.parquet")
+        _write(model.encode(df), path, model.fmt, **model.sink, **options)
+        return path
+
+    return fixture
+
+
+def _by_id(n: int, sort: bool = False):
+    # n range-disjoint files on event_id, each id-sorted if ``sort``
+    def layout(df, src):
+        df = _range_partition_fixture(df, n, "event_id", src)
+        return df.sortWithinPartitions("event_id") if sort else df
+
+    return _batch(layout)
+
+
+# UNCLUSTERED: every file's event_id span covers the domain, so the
+# zone tier keeps all of them
+_SHUFFLED = _batch(lambda df, src: df.repartition(6))
+
+
+def _streamed(spark, sf, model, root, **options):
+    # stream fixture: the events parquet through the model's stream sink
+    from fourmc_spark.streaming import read_events_stream
+
+    sdf = _events(read_events_stream(spark, f"{sf}/events.parquet"),
+                  model.ddl)
+    return _drain(model.encode(sdf), root, model.fmt, **model.sink,
+                  **options)
+
+
+def lifecycle(spark, sf, finish, model, fixture, seal=None, compact=False,
+              poison=None, **sink_options) -> DataFrame:
+    """One sealed-log lifecycle in a scratch dir: ``fixture`` writes the
+    events as ``model`` records (``sink_options`` ride the sink, e.g. a
+    write-time statsschema seal); ``seal(spark, path)`` seals the
+    sidecars; ``compact`` block-copies the tree into two files, carrying
+    them; ``poison`` (``_plant_poison`` keywords) plants a file only
+    pruning can skip; ``finish`` shapes the typed read of the tree."""
+    with _scratch(spark) as root:
+        path = fixture(spark, sf, model, root, **sink_options)
+        if seal:
+            seal(spark, path)
+        if compact:
+            path = _compact(spark, path, f"{root}/compact", parts=2)
+        if poison:
+            _plant_poison(path, **poison)
+        back = spark.read.format(model.fmt).options(**model.scan).load(path)
+        return _detach(finish(back))
+
+
+def _case(name: str, shape, **steps) -> None:
+    """Register one lifecycle row; ``shape`` pairs the oracle SQL with
+    the Spark finish."""
+    oracle, finish = shape
+    query(name, oracle)(
+        lambda spark, sf: lifecycle(spark, sf, finish, **steps)
+    )
+
+
+def _ranged(where: str):
+    # summary of the rows matching the SQL predicate, on both sides
+    return _summary_oracle(where), lambda df: _summary(df.where(where))
+
+
+def _lookup(*ids):
+    # point lookup of event ids, on both sides
+    return _points_oracle(ids), lambda df: _points(df, ids)
+
+
+def _analyze(spark, path):
+    maintenance.analyze_stats(spark, path, _EV_DDL)
+
+
+def _analyze_proto(spark, path):
+    maintenance.analyze_stats_proto(spark, path, fields=_PROTO_SCHEMA)
+
+
+def _analyze_bloom(spark, path):
+    maintenance.analyze_bloom(spark, path, _EV_DDL, ["event_id"],
+                              bits=_BLOOM_BITS, k=_BLOOM_K)
+
+
+# The PROTOBUF surface (S8/K4) through the oracle gate — the proto twin
+# of stream_4mc_tumbling: events are wire-encoded as ElephantBird
+# block-framed protobuf records inside 4mz via the fourmcproto sink, read
+# back through the fourmcproto scan, and aggregated; the result must
+# equal the batch oracle exactly, so a varint/zigzag/field-framing bug
+# anywhere in the round trip breaks the hash match.
+_case("proto_4mc_roundtrip", (_summary_oracle(), _summary),
+      model=_PROTO, fixture=_batch(lambda df, src: df))
+
+# Zone maps for the PROTOBUF typed scan (round 10): before this, the
+# proto reader got partition/path pruning but a range predicate on a
+# payload int64 (the reference's `birthDate` shape, user.proto:11)
+# scanned every file. analyze_stats_proto streams each file's EB records
+# once (one task per file, sidecar written executor-side) and records the
+# same two-tier sidecar the text scan uses, keyed by the sync-marker-owner
+# block offset; the shared pushFilters accepts value constraints on the
+# declared scalar payload fields. Same poison proof as the text twins.
+_case("proto_4mc_zonemap_scan", _ranged("event_id BETWEEN 1500 AND 3099"),
+      model=_PROTO, fixture=_by_id(6), seal=_analyze_proto, poison=_ID_ZONE)
+
+# Bloom sidecars on the PROTOBUF typed scan (round 10): events are
+# written UNCLUSTERED, and analyze_stats_proto seals per-file bloom
+# bitmaps IN THE SAME decode pass (bloom_columns: xxh64(str(value)) seed
+# 42 — byte-identical to the NDJSON tier's JVM CAST-AS-STRING contract,
+# so the shared _bloom_file_pruned probe needs no proto-specific path).
+# The reader's pushFilters turns the IN-list into point probes and drops
+# files whose bloom proves all ids absent; the all-zero-bloom poison is
+# green iff the probe pruned it before any footer read.
+_case("proto_4mc_bloom_scan", _lookup(9, 230, 615),
+      model=_PROTO, fixture=_SHUFFLED, poison=_ID_BLOOM,
+      seal=lambda spark, path: maintenance.analyze_stats_proto(
+          spark, path, fields=_PROTO_SCHEMA, bloom_columns=["event_id"],
+          bloom_bits=_BLOOM_BITS, bloom_k=_BLOOM_K))
+
+# BLOCK tier of the proto zone maps (round 10; proto twin of
+# sql_4mc_zonemap_blocks_scan): events sorted by event_id into 2 sealed
+# EB-protobuf files with 8 KiB container blocks and 25 records per EB
+# block, so the range's selectivity lives INSIDE files;
+# analyze_stats_proto keys per-block min/max by the block in which each
+# record's sync marker STARTS — the exact ownership rule the split reader
+# enforces — and the planner drops non-matching blocks within kept files.
+# The hash oracle is unforgiving about the two ownership seams: an EB
+# block SPANNING into a dropped container block must still complete
+# (split spillover), and records OWNED by a dropped block must not
+# survive via their spill bytes.
+_case("proto_4mc_zonemap_blocks_scan",
+      _ranged("event_id BETWEEN 900 AND 2499"),
+      model=_PROTO, fixture=_by_id(2, sort=True), seal=_analyze_proto,
+      blocksize=8 * 1024, recordsperblock=25)
+
+# K4 STREAMING twin under the oracle gate (round 8): events stream from
+# parquet through writeStream.format("fourmcproto") — rows wire-encoded
+# as ElephantBird block-framed protobuf inside sealed .4mz files, with
+# the fourmc stream sink's batch-replay-idempotent deterministic commit
+# names — then batch-read back through the fourmcproto scan and
+# aggregated. Equality with the batch oracle certifies the streaming
+# proto pipeline sealed every row exactly once AND every varint/zigzag/EB
+# frame survived; the proto twin of stream_4mc_sink the way
+# proto_4mc_roundtrip twins stream_4mc_tumbling.
+_case("stream_proto_sink", (_summary_oracle(), _summary),
+      model=_PROTO, fixture=_streamed)
 
 
 @query(
@@ -3284,33 +3224,22 @@ def sql_4mc_pruned_scan_q(spark, sf):
     # (scan_file_info: one tail read, no data scan), the same metadata
     # any reader of the file holds.
     import glob as _glob
-    import shutil
-    import tempfile
 
     from fourmc_spark.format.reader import scan_file_info
-    from fourmc_spark.session import register_fourmc
 
-    register_fourmc(spark)
-    ev = _t(spark, sf, "events")
-    lines = ev.select(
-        F.concat_ws(
-            ",",
-            F.lpad(F.col("event_id").cast("string"), 10, "0"),
-            F.lpad(F.col("user_id").cast("string"), 10, "0"),
-            F.rpad(F.col("event_type"), 9, " "),
-        ).alias("value"),
-        "event_id",
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-sql-scan-")
-    try:
-        (
-            lines.repartition(1).sortWithinPartitions("event_id")
-            .select("value")
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 4096)
-            .mode("overwrite").save(d)
+    with _scratch(spark) as d:
+        ev = _t(spark, sf, "events")
+        lines = ev.select(
+            F.concat_ws(
+                ",",
+                F.lpad(F.col("event_id").cast("string"), 10, "0"),
+                F.lpad(F.col("user_id").cast("string"), 10, "0"),
+                F.rpad(F.col("event_type"), 9, " "),
+            ).alias("value"),
+            "event_id",
         )
+        _write(lines.repartition(1).sortWithinPartitions("event_id")
+               .select("value"), d, blocksize=4096)
         n = ev.count()
         # skip floor of 128: at skip=0 the Spark filter would keep line 0
         # (owned by block 0 — no preceding byte) while the oracle's
@@ -3342,8 +3271,6 @@ def sql_4mc_pruned_scan_q(spark, sf):
             .orderBy("event_type")
         )
         return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 @query(
@@ -3381,28 +3308,15 @@ def sql_4mc_file_pruned_scan_q(spark, sf):
     # Scale shape: pruning cost is O(files) path-string checks on the
     # driver — no data read, no footer read for pruned files; the kept
     # files still split by maxpartitionbytes, so the scan stays parallel.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    ev = _t(spark, sf, "events")
-    n = ev.count()
-    step = (n + 7) // 8
-    lines = ev.select(
-        F.concat_ws(",", "event_id", "user_id").alias("value"),
-        F.expr(f"CAST(pmod((event_id - 1) DIV {step}, 8) AS STRING)")
-        .alias("bucket"),
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-file-prune-")
-    try:
-        (
-            lines.write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("partitionby", "bucket")
-            .mode("overwrite").save(d)
+    with _scratch(spark) as d:
+        ev = _t(spark, sf, "events")
+        step = (ev.count() + 7) // 8
+        lines = ev.select(
+            F.concat_ws(",", "event_id", "user_id").alias("value"),
+            F.expr(f"CAST(pmod((event_id - 1) DIV {step}, 8) AS STRING)")
+            .alias("bucket"),
         )
+        _write(lines, d, partitionby="bucket")
         back = (
             spark.read.format("fourmc")
             .option("partitioncolumns", "bucket").load(d)
@@ -3425,171 +3339,39 @@ def sql_4mc_file_pruned_scan_q(spark, sf):
             .orderBy("bucket")
         )
         return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
-@query(
-    "sql_4mc_zonemap_scan",
-    """SELECT event_type,
-              CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 1200 AND 2799
-       GROUP BY event_type ORDER BY event_type""",
-)
-def sql_4mc_zonemap_scan_q(spark, sf):
-    # DATA-DEPENDENT whole-file pruning under the driver hash gate
-    # (round 9): sql_4mc_file_pruned_scan prunes by hive PATH values;
-    # this one prunes by CONTENT zone maps — analyze_stats() sidecars
-    # record per-file min/max, and the typed NDJSON scan
-    # (option jsonschema) pushes the event_id range into the planner,
-    # which skips every file whose [min, max] cannot overlap. That is
-    # the Iceberg/parquet-footer tier for time/id-ordered sealed logs —
-    # at 100 TB a range query opens only the few files that can match.
-    #
-    # The pruning is PROVEN inside the gate: after ANALYZE, a poison
-    # file of garbage bytes (not a 4mc container) is planted with a
-    # valid, size-matching sidecar whose range [10^9, 2*10^9] is
-    # disjoint from the predicate. Planning that ever opened that file
-    # would throw BadHeaderError and the gate would go red; the query
-    # succeeds iff the zone map excluded it before any footer read.
-    # Conservative-safety twin pins live in
-    # tests/test_datasource.py (stale/missing sidecars never prune).
-    import json as _json
-    import os
-    import shutil
-    import tempfile
+# DATA-DEPENDENT whole-file pruning under the oracle hash gate (round 9):
+# sql_4mc_file_pruned_scan prunes by hive PATH values; this one prunes by
+# CONTENT zone maps — analyze_stats() sidecars record per-file min/max,
+# and the typed NDJSON scan (option jsonschema) pushes the event_id range
+# into the planner, which skips every file whose [min, max] cannot
+# overlap. That is the Iceberg/parquet-footer tier for time/id-ordered
+# sealed logs — at 100 TB a range query opens only the few files that
+# can match. The pruning is PROVEN inside the gate by the poison: its
+# range [10^9, 2*10^9] is disjoint from the predicate, so planning that
+# ever opened it would throw BadHeaderError and the gate would go red.
+# Conservative-safety twin pins live in tests/test_datasource.py
+# (stale/missing sidecars never prune).
+_case("sql_4mc_zonemap_scan", _ranged("event_id BETWEEN 1200 AND 2799"),
+      model=_NDJSON, fixture=_by_id(6), seal=_analyze, poison=_ID_ZONE)
 
-    from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-zonemap-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        analyze_stats(spark, d, ddl)
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 1,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").between(1200, 2799))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@query(
-    "sql_4mc_zonemap_blocks_scan",
-    """SELECT event_type,
-              CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 800 AND 1999
-       GROUP BY event_type ORDER BY event_type""",
-)
-def sql_4mc_zonemap_blocks_scan_q(spark, sf):
-    # BLOCK tier of the zone map under the driver hash gate (round 9):
-    # sql_4mc_zonemap_scan proves file-level pruning; here events are
-    # globally SORTED by event_id into just 2 sealed files with 16 KiB
-    # blocks, so the range predicate's selectivity lives INSIDE files —
-    # analyze_stats(blocks=True) records per-block min/max keyed by the
-    # block offset the scan exposes, and the planner drops non-matching
-    # blocks within the kept file(s) (the parquet-row-group analog for
-    # sealed 4mc logs). The hash oracle is unforgiving about the two
-    # ownership seams: a line SPANNING into a dropped block must still
-    # complete (split spillover), and a line OWNED by a dropped block
-    # must not survive via its spill bytes. Partition-count pins:
-    # tests/test_datasource.py::test_block_zone_maps_prune_within_file.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-zonemap-blk-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 2, "event_id", f"{sf}/events.parquet"
-            )
-            .sortWithinPartitions("event_id")
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 16 * 1024)
-            .mode("overwrite").save(d)
-        )
-        analyze_stats(spark, d, ddl, blocks=True)
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").between(800, 1999))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+# BLOCK tier of the zone map under the oracle hash gate (round 9):
+# sql_4mc_zonemap_scan proves file-level pruning; here events are
+# globally SORTED by event_id into just 2 sealed files with 16 KiB
+# blocks, so the range predicate's selectivity lives INSIDE files —
+# analyze_stats (blocks=True, its default) records per-block min/max
+# keyed by the block offset the scan exposes, and the planner drops
+# non-matching blocks within the kept file(s) (the parquet-row-group
+# analog for sealed 4mc logs). The hash oracle is unforgiving about the
+# two ownership seams: a line SPANNING into a dropped block must still
+# complete (split spillover), and a line OWNED by a dropped block must
+# not survive via its spill bytes. Partition-count pins:
+# tests/test_datasource.py::test_block_zone_maps_prune_within_file.
+_case("sql_4mc_zonemap_blocks_scan",
+      _ranged("event_id BETWEEN 800 AND 1999"),
+      model=_NDJSON, fixture=_by_id(2, sort=True), seal=_analyze,
+      blocksize=16 * 1024)
 
 
 def _bpe_learn_sql(n_merges: int) -> str:
@@ -5044,44 +4826,21 @@ def stream_cdc_apply_q(spark, sf):
         shutil.rmtree(d, ignore_errors=True)
 
 
-# shared scaffold of the 4mc stream-source gate queries: events ride as
-# JSON lines in sealed .4mz files (ts as a formatted string so from_json
-# rebuilds exact micros), then come back as a typed stream
-_EV_JSON_SCHEMA = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
-                   "event_type STRING, value DOUBLE")
-
-
+# the 4mc stream-source lifecycle queries: events ride as JSON lines in
+# sealed .4mz files, then come back as a typed stream
 def _stage_events_4mz(spark, sf: str, d: str, n_files: int) -> None:
-    ev = _t(spark, sf, "events").select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id", "event_type", "value",
-    )
-    (
-        ev.select(F.to_json(F.struct(*ev.columns)).alias("value"))
-        .repartition(n_files)
-        .write.format("fourmc").option("codec", "zstd")
-        .option("level", "fast").mode("overwrite").save(d)
-    )
+    ev = _NDJSON_TS.encode(_events(_t(spark, sf, "events"), _EV_TS_DDL))
+    _write(ev.repartition(n_files), d, level="fast")
 
 
 def _events_json_stream(spark, path: str, **options) -> DataFrame:
-    reader = spark.readStream.format("fourmc")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return (
-        reader.load(path)
-        .select(F.from_json("value", _EV_JSON_SCHEMA).alias("_r"))
-        .select("_r.*")
+    return _parsed(
+        spark.readStream.format("fourmc").options(**options).load(path),
+        _EV_TS_DDL,
     )
 
 
-@query(
-    "stream_4mc_tumbling",
-    """SELECT date_trunc('hour', ts) AS win_start, event_type,
-              CAST(count(*) AS BIGINT) AS cnt, round(sum(value), 2) AS sum_value
-       FROM {EV} GROUP BY 1, 2 ORDER BY 1, 2""",
-)
+@query("stream_4mc_tumbling", _TUMBLING_ORACLE)
 def stream_4mc_tumbling_q(spark, sf):
     # The 4mc STREAMING SOURCE inside the oracle gate: events are
     # re-encoded as JSON lines in sealed .4mz files, streamed back
@@ -5090,632 +4849,131 @@ def stream_4mc_tumbling_q(spark, sf):
     # must equal the batch oracle exactly, proving the stream source
     # loses/duplicates nothing and the whole JSON+timestamp round trip
     # is value-exact.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import tumbling_counts
 
-    register_fourmc(spark)  # idempotent — the driver's session may not
-    # have gone through get_spark
-    d = tempfile.mkdtemp(prefix="fourmc-stream4mc-")
-    try:
+    with _scratch(spark) as d:
         _stage_events_4mz(spark, sf, d, n_files=3)
         sdf = _events_json_stream(spark, d)
         out = _run_stream(
             tumbling_counts(sdf, window="1 hour"), src=d
         ).orderBy("win_start", "event_type")
         return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
-@query(
-    "sql_4mc_sinkstats_scan",
-    """SELECT event_type,
-              CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 400 AND 1599
-       GROUP BY event_type ORDER BY event_type""",
-)
-def sql_4mc_sinkstats_scan_q(spark, sf):
-    # Zone maps at WRITE time (round 9): the sink's statsschema option
-    # computes each sealed file's min/max from the exact rows it
-    # receives and seals the sidecar with the file — fresh ingest
-    # prunes immediately, no ANALYZE pass at all. Construction mirrors
-    # sql_4mc_zonemap_scan minus analyze_stats: events write id-sorted
-    # into 6 files WITH statsschema, a poison file (garbage bytes +
-    # valid out-of-range sidecar) is planted, and the range query must
-    # both hash-match the batch oracle (sink-computed stats that were
-    # too NARROW would prune real rows and break the hash) and survive
-    # the poison (proving pruning engaged before any footer read).
-    import json as _json
-    import os
-    import shutil
-    import tempfile
+# Zone maps at WRITE time (round 9): the sink's statsschema option
+# computes each sealed file's min/max from the exact rows it receives and
+# seals the sidecar with the file — fresh ingest prunes immediately, no
+# ANALYZE pass at all. Construction mirrors sql_4mc_zonemap_scan minus
+# analyze_stats: the range query must both hash-match the batch oracle
+# (sink-computed stats that were too NARROW would prune real rows and
+# break the hash) and survive the poison (proving pruning engaged before
+# any footer read).
+_case("sql_4mc_sinkstats_scan", _ranged("event_id BETWEEN 400 AND 1599"),
+      model=_NDJSON, fixture=_by_id(6), poison=_ID_ZONE,
+      statsschema=_EV_DDL)
 
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
+# TEMPORAL zone maps under the oracle hash gate (round 10): time is THE
+# clustering key for sealed logs, and until this round a `ts BETWEEN`
+# predicate pruned nothing (the r9 pushdown kept only number/string
+# bounds). Now analyze_stats records TimestampType min/max as EPOCH
+# MICROS (computed JVM-side via unix_micros, so the sidecar is
+# session-timezone-free), and the typed scan's pushdown canonicalizes
+# the tz-aware instant filter values that VariantVal delivers to the
+# same micros before comparing — a range on `ts` prunes whole files
+# exactly like an id range. Same in-gate poison proof as
+# sql_4mc_zonemap_scan, with the poison's ts range in 2030.
+_case("sql_4mc_zonemap_ts_scan",
+      _ranged("ts >= TIMESTAMP '2024-01-10 00:00:00' "
+              "AND ts < TIMESTAMP '2024-01-20 00:00:00'"),
+      model=_NDJSON_TS,
+      # the frame carries ts as a FORMATTED STRING; bucket on its
+      # instant micros (exact integer math), bounds from the footer's
+      # timestamp stats. Non-UTC parse would only shift bucket edges,
+      # never results.
+      fixture=_batch(lambda df, src: _range_partition_fixture(
+          df, 6, "ts", src, key=F.unix_micros(F.to_timestamp("ts")))),
+      seal=lambda spark, path: maintenance.analyze_stats(
+          spark, path, _EV_TS_DDL),
+      # 2030-01-01 .. 2030-01-02 as epoch micros: disjoint from the
+      # Jan-2024 predicate window
+      poison={"zone": {"ts": {"min": 1893456000000000,
+                              "max": 1893542400000000, "nulls": 0}}})
 
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-sinkstats-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("statsschema", ddl)
-            .mode("overwrite").save(d)
-        )
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").between(400, 1599))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+# The full sealed-log LIFECYCLE under one hash gate (round 9): ingest (6
+# id-sorted small files) -> ANALYZE (two-tier zone maps) ->
+# compact_blocks (raw copy CARRIES the zone maps: block entries remap to
+# output offsets, file tiers merge, seam blocks dropped) -> range query
+# over the COMPACTED tree through the typed scan, pruned by the CARRIED
+# sidecars with no re-ANALYZE. The oracle is the plain batch query over
+# events, so a carried entry that is too narrow at a concatenation seam
+# (a lost first-line), a mis-remapped block offset, or an over-merged
+# file tier breaks the hash. The poison planted in the compacted dir
+# proves file-tier pruning engages end-to-end.
+_case("maintenance_compact_zonemap",
+      _ranged("event_id BETWEEN 2000 AND 3599"),
+      model=_NDJSON, fixture=_by_id(6, sort=True), seal=_analyze,
+      compact=True, poison=_ID_ZONE, blocksize=16 * 1024)
 
+# BLOOM-SIDECAR point-lookup pruning under the oracle hash gate (round
+# 10): zone maps prune by [min, max] — decisive on the clustering key and
+# useless on everything else. Here events are written UNCLUSTERED and
+# analyze_bloom() seals a per-file bloom bitmap; the typed scan's
+# pushdown turns the IN-list into point probes (xxhash64 of the value's
+# canonical text, k bit tests per file — no data I/O) and drops every
+# file whose bloom proves all probed ids absent. That is the
+# parquet-bloom/Iceberg point-lookup economics for sealed logs: at 100 TB
+# an id lookup opens ~1 file instead of all of them, false positives only
+# cost a scan the re-applied filter empties. The all-zero-bloom poison
+# (under the real contract tag) proves it in-gate. Conservative-safety
+# twins (missing/foreign-tagged blooms never prune; type-mismatched
+# values never prune) live in tests/test_bloom.py.
+_case("sql_4mc_bloom_scan", _lookup(3, 17, 411, 888),
+      model=_NDJSON, fixture=_SHUFFLED, seal=_analyze_bloom,
+      poison=_ID_BLOOM)
 
-@query(
-    "sql_4mc_zonemap_ts_scan",
-    """SELECT event_type,
-              CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM {EV} ev
-       WHERE ts >= TIMESTAMP '2024-01-10 00:00:00'
-         AND ts <  TIMESTAMP '2024-01-20 00:00:00'
-       GROUP BY event_type ORDER BY event_type""",
-)
-def sql_4mc_zonemap_ts_scan_q(spark, sf):
-    # TEMPORAL zone maps under the driver hash gate (round 10): time is
-    # THE clustering key for sealed logs, and until this round a
-    # `ts BETWEEN` predicate pruned nothing (the r9 pushdown kept only
-    # number/string bounds). Now analyze_stats records TimestampType
-    # min/max as EPOCH MICROS (computed JVM-side via unix_micros, so
-    # the sidecar is session-timezone-free), and the typed scan's
-    # pushdown canonicalizes the tz-aware instant filter values that
-    # VariantVal delivers to the same micros before comparing — a range
-    # on `ts` prunes whole files exactly like an id range.
-    #
-    # Same in-gate poison proof as sql_4mc_zonemap_scan: a garbage file
-    # with a valid, size-matching sidecar whose ts range lives in 2030
-    # is planted after ANALYZE; planning that ever opened it would
-    # throw, so the gate is green iff temporal pruning engaged before
-    # any footer read. ts serializes at FULL microsecond precision
-    # (date_format pattern, not to_json's millis default) so the
-    # typed-scan values hash-match the parquet oracle exactly.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
+# The typed-pruning tier on CSV lines (round 10): csvschema is the second
+# record model to get the full sidecar surface — the scan parses value
+# lines with Arrow's CSV kernels (positional DDL, from_csv-matching
+# conventions: backslash escapes, empty field = NULL, quoted "" also
+# NULL, Z-suffixed timestamps), which makes value predicates pushable,
+# and analyze_stats(record_format='csv') seals the same two-tier zone
+# maps the NDJSON tier prunes with. Same in-gate poison proof.
+_case("sql_4mc_csv_zonemap_scan", _ranged("event_id BETWEEN 1100 AND 2699"),
+      model=_CSV, fixture=_by_id(6), poison=_ID_ZONE,
+      seal=lambda spark, path: maintenance.analyze_stats(
+          spark, path, _EV_DDL, record_format="csv"))
 
-    from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
+# BLOCK-tier blooms under the oracle hash gate (round 10): events land as
+# ONE sealed file of many small blocks — the file tier cannot shrink
+# anything — and analyze_bloom's block_bits seals a per-block bitmap
+# keyed by the owning block's compressed offset. The planner drops every
+# block whose bitmap proves all probed ids absent; dropping a block
+# removes exactly the lines it OWNS (split spillover completes a line
+# that starts in a kept partition), so the oracle hash pins BOTH
+# ownership seams across many block boundaries on an UNCLUSTERED layout
+# — the parquet-page economics for point lookups, no clustering needed.
+_case("sql_4mc_bloom_blocks_scan", _lookup(21, 433, 777),
+      model=_NDJSON, fixture=_batch(lambda df, src: df.coalesce(1)),
+      seal=lambda spark, path: maintenance.analyze_bloom(
+          spark, path, _EV_DDL, ["event_id"],
+          bits=1 << 16, k=5, block_bits=1 << 12, block_k=4),
+      blocksize=16 * 1024)
 
-    register_fourmc(spark)
-    ddl = ("ts timestamp, event_id bigint, user_id bigint, "
-           "event_type string, value double")
-    ev = _t(spark, sf, "events").select(
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "event_id", "user_id", "event_type", "value",
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-zonemap-ts-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "ts", f"{sf}/events.parquet",
-                # the frame carries ts as a FORMATTED STRING; bucket on
-                # its instant micros (exact integer math), bounds from
-                # the footer's timestamp stats. Non-UTC parse would
-                # only shift bucket edges, never results.
-                key=F.unix_micros(F.to_timestamp("ts")),
-            )
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        analyze_stats(spark, d, ddl)
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        # 2030-01-01 .. 2030-01-02 as epoch micros:
-                        # disjoint from the Jan-2024 predicate window
-                        "ts": {
-                            "min": 1893456000000000,
-                            "max": 1893542400000000,
-                            "nulls": 0,
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(
-                (F.col("ts") >= "2024-01-10 00:00:00")
-                & (F.col("ts") < "2024-01-20 00:00:00")
-            )
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+# Bloom sidecars survive COMPACTION without re-hashing (round 10): ingest
+# (6 unclustered small files) -> analyze_bloom -> raw block-copy
+# compaction, whose sidecar carry OR-merges the inputs' bitmaps (bloom of
+# a union IS the bitwise OR — exact, unlike the seam-lossy zone-map
+# carry) -> point-IN query over the COMPACTED tree, pruned by the carried
+# blooms with no re-ANALYZE. The oracle is the plain batch query over
+# events, so an OR-merge that lost a bit (false absence) would lose a row
+# and break the hash; the all-zero-bloom poison planted in the compacted
+# dir proves the probe path engages before any footer read.
+_case("maintenance_compact_bloom", _lookup(5, 240, 777),
+      model=_NDJSON, fixture=_SHUFFLED, seal=_analyze_bloom,
+      compact=True, poison=_ID_BLOOM)
 
 
-@query(
-    "maintenance_compact_zonemap",
-    """SELECT event_type,
-              CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 2000 AND 3599
-       GROUP BY event_type ORDER BY event_type""",
-)
-def maintenance_compact_zonemap_q(spark, sf):
-    # The full sealed-log LIFECYCLE under one hash gate (round 9):
-    # ingest (6 id-sorted small files) -> ANALYZE (two-tier zone maps)
-    # -> compact_blocks (raw copy CARRIES the zone maps: block entries
-    # remap to output offsets, file tiers merge, seam blocks dropped)
-    # -> range query over the COMPACTED tree through the typed scan,
-    # pruned by the CARRIED sidecars with no re-ANALYZE. The oracle is
-    # the plain batch query over events, so a carried entry that is too
-    # narrow at a concatenation seam (a lost first-line), a mis-remapped
-    # block offset, or an over-merged file tier breaks the hash. A
-    # poison file (garbage bytes + valid out-of-range sidecar) planted
-    # in the compacted dir proves file-tier pruning engages end-to-end.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats, compact_blocks
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    root = tempfile.mkdtemp(prefix="fourmc-compact-zm-")
-    staged, out = f"{root}/staged", f"{root}/compact"
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .sortWithinPartitions("event_id")
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 16 * 1024)
-            .mode("overwrite").save(staged)
-        )
-        analyze_stats(spark, staged, ddl)
-        import glob as _glob
-        total = sum(
-            os.path.getsize(p) for p in _glob.glob(f"{staged}/part-*.4mz")
-        )
-        stats = compact_blocks(
-            spark, staged, out, target_bytes=max(1, total // 2)
-        )
-        assert stats["stats_carried"] == stats["outputs"], stats
-        poison = os.path.join(out, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out)
-            .where(F.col("event_id").between(2000, 3599))
-        )
-        agg = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(agg)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@query(
-    "sql_4mc_bloom_scan",
-    """SELECT CAST(event_id AS BIGINT) AS event_id,
-              CAST(user_id AS BIGINT) AS user_id,
-              event_type, value
-       FROM events WHERE event_id IN (3, 17, 411, 888)
-       ORDER BY event_id""",
-)
-def sql_4mc_bloom_scan_q(spark, sf):
-    # BLOOM-SIDECAR point-lookup pruning under the driver hash gate
-    # (round 10): zone maps prune by [min, max] — decisive on the
-    # clustering key and useless on everything else. Here events are
-    # written UNCLUSTERED (hash repartition: every file's event_id span
-    # covers the whole domain, so the zone tier keeps all of them) and
-    # analyze_bloom() seals a per-file bloom bitmap; the typed scan's
-    # pushdown turns the IN-list into point probes (xxhash64 of the
-    # value's canonical text, k bit tests per file — no data I/O) and
-    # drops every file whose bloom proves all probed ids absent. That
-    # is the parquet-bloom/Iceberg point-lookup economics for sealed
-    # logs: at 100 TB an id lookup opens ~1 file instead of all of
-    # them, false positives only cost a scan the re-applied filter
-    # empties.
-    #
-    # The pruning is PROVEN in-gate: a poison file of garbage bytes
-    # carries a valid, size-matching sidecar whose bloom bitmap is ALL
-    # ZERO under the real contract tag — every probe tests negative,
-    # so planning must drop it before any footer read or the gate goes
-    # red. Conservative-safety twins (missing/foreign-tagged blooms
-    # never prune; type-mismatched values never prune) live in
-    # tests/test_bloom.py.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_bloom
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    bits, k = 1 << 18, 6
-    d = tempfile.mkdtemp(prefix="fourmc-bloom-")
-    try:
-        (
-            ev.repartition(6)  # UNCLUSTERED: zone maps cannot prune this
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        analyze_bloom(spark, d, ddl, ["event_id"], bits=bits, k=k)
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        out = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").isin([3, 17, 411, 888]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@query(
-    "sql_4mc_csv_zonemap_scan",
-    """SELECT event_type,
-              CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 1100 AND 2699
-       GROUP BY event_type ORDER BY event_type""",
-)
-def sql_4mc_csv_zonemap_scan_q(spark, sf):
-    # The typed-pruning tier on CSV lines (round 10): csvschema is the
-    # second record model to get the full sidecar surface — the scan
-    # parses value lines with Arrow's CSV kernels (positional DDL,
-    # from_csv-matching conventions: backslash escapes, empty field =
-    # NULL, quoted "" also NULL, Z-suffixed timestamps), which makes
-    # value predicates pushable, and analyze_stats(record_format='csv')
-    # seals the same two-tier zone maps the NDJSON tier prunes with.
-    # Same in-gate poison proof: a garbage container with a valid
-    # out-of-range sidecar is planted — green iff file pruning engaged
-    # before any footer read.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_stats
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-csv-zm-")
-    try:
-        (
-            _range_partition_fixture(
-                ev, 6, "event_id", f"{sf}/events.parquet"
-            )
-            .select(F.to_csv(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(d)
-        )
-        analyze_stats(spark, d, ddl, record_format="csv")
-        poison = os.path.join(d, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("csvschema", ddl).load(d)
-            .where(F.col("event_id").between(1100, 2699))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@query(
-    "sql_4mc_bloom_blocks_scan",
-    """SELECT CAST(event_id AS BIGINT) AS event_id,
-              CAST(user_id AS BIGINT) AS user_id,
-              event_type, value
-       FROM events WHERE event_id IN (21, 433, 777)
-       ORDER BY event_id""",
-)
-def sql_4mc_bloom_blocks_scan_q(spark, sf):
-    # BLOCK-tier blooms under the driver hash gate (round 10): events
-    # land as ONE sealed file of many small blocks — the file tier
-    # cannot shrink anything — and analyze_bloom's block_bits seals a
-    # per-block bitmap keyed by the owning block's compressed offset.
-    # The planner drops every block whose bitmap proves all probed ids
-    # absent; dropping a block removes exactly the lines it OWNS
-    # (split spillover completes a line that starts in a kept
-    # partition), so the oracle hash pins BOTH ownership seams across
-    # many block boundaries on an UNCLUSTERED layout — the
-    # parquet-page economics for point lookups, no clustering needed.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_bloom
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    d = tempfile.mkdtemp(prefix="fourmc-bloom-blocks-")
-    try:
-        (
-            ev.coalesce(1)
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("blocksize", 16 * 1024)
-            .mode("overwrite").save(d)
-        )
-        analyze_bloom(
-            spark, d, ddl, ["event_id"],
-            bits=1 << 16, k=5, block_bits=1 << 12, block_k=4,
-        )
-        out = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(d)
-            .where(F.col("event_id").isin([21, 433, 777]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@query(
-    "maintenance_compact_bloom",
-    """SELECT CAST(event_id AS BIGINT) AS event_id,
-              CAST(user_id AS BIGINT) AS user_id,
-              event_type, value
-       FROM events WHERE event_id IN (5, 240, 777)
-       ORDER BY event_id""",
-)
-def maintenance_compact_bloom_q(spark, sf):
-    # Bloom sidecars survive COMPACTION without re-hashing (round 10):
-    # ingest (6 unclustered small files) -> analyze_bloom -> raw
-    # block-copy compaction, whose sidecar carry OR-merges the inputs'
-    # bitmaps (bloom of a union IS the bitwise OR — exact, unlike the
-    # seam-lossy zone-map carry) -> point-IN query over the COMPACTED
-    # tree, pruned by the carried blooms with no re-ANALYZE. The oracle
-    # is the plain batch query over events, so an OR-merge that lost a
-    # bit (false absence) would lose a row and break the hash; a poison
-    # file planted in the compacted dir (garbage bytes + all-zero
-    # bloom) proves the probe path engages before any footer read.
-    import glob as _glob
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import analyze_bloom, compact_blocks
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    ev = _t(spark, sf, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    bits, k = 1 << 18, 6
-    root = tempfile.mkdtemp(prefix="fourmc-compact-bloom-")
-    staged, out = f"{root}/staged", f"{root}/compact"
-    try:
-        (
-            ev.repartition(6)
-            .select(F.to_json(F.struct(*ev.columns)).alias("value"))
-            .write.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .mode("overwrite").save(staged)
-        )
-        analyze_bloom(spark, staged, ddl, ["event_id"], bits=bits, k=k)
-        total = sum(
-            os.path.getsize(p) for p in _glob.glob(f"{staged}/part-*.4mz")
-        )
-        stats = compact_blocks(
-            spark, staged, out, target_bytes=max(1, total // 2)
-        )
-        assert stats["stats_carried"] == stats["outputs"], stats
-        poison = os.path.join(out, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out)
-            .where(F.col("event_id").isin([5, 240, 777]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(back)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-@query(
-    "stream_4mc_multibatch",
-    """SELECT date_trunc('hour', ts) AS win_start, event_type,
-              CAST(count(*) AS BIGINT) AS cnt, round(sum(value), 2) AS sum_value
-       FROM {EV} GROUP BY 1, 2 ORDER BY 1, 2""",
-)
+@query("stream_4mc_multibatch", _TUMBLING_ORACLE)
 def stream_4mc_multibatch_q(spark, sf):
     # Multi-micro-batch exactly-once through the 4mc STREAM SOURCE:
     # stream_4mc_tumbling drains its sealed files in ONE batch, so the
@@ -5734,17 +4992,12 @@ def stream_4mc_multibatch_q(spark, sf):
     # tests/test_streaming.py::test_stream_4mc_multibatch_takes_n_batches.)
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
     import uuid as _uuid
 
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import tumbling_counts
 
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-stream-mb-")
-    staged, live = f"{root}/staged", f"{root}/live"
-    try:
+    with _scratch(spark) as root:
+        staged, live = f"{root}/staged", f"{root}/live"
         _stage_events_4mz(spark, sf, staged, n_files=6)
         files = sorted(_glob.glob(f"{staged}/part-*.4mz"))
         _os.makedirs(live)
@@ -5764,79 +5017,30 @@ def stream_4mc_multibatch_q(spark, sf):
         finally:
             q.stop()
             q.awaitTermination()
-        out = spark.table(name).orderBy("win_start", "event_type")
-        return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _detach(spark.table(name).orderBy("win_start", "event_type"))
 
 
-@query(
-    "maintenance_compact_4mc",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM {EV} GROUP BY event_type ORDER BY event_type""",
-)
+@query("maintenance_compact_4mc", _summary_oracle())
 def maintenance_compact_4mc_q(spark, sf):
     # Small-file COMPACTION under the hash gate (operators/maintenance.py):
-    # events
-    # land as JSON lines in 24 small sealed .4mz files (the streaming
-    # sink's long-run accumulation shape), compact_blocks raw-copies their
-    # blocks into ~3 large sealed containers (no recompression — block
-    # payloads move verbatim, only header/EOS/footer are rewritten; one
-    # Spark task per output, planned from footer-only preads), and the
-    # aggregate over the COMPACTED tree must equal the batch oracle over
-    # the original events exactly — a block dropped, reordered across a
-    # bin boundary, or a glued line at an unterminated file seam breaks
-    # the hash. Structural pins (output count, block arithmetic, CLI
-    # seal verification) live in tests/test_maintenance.py.
-    import glob as _glob
-    import os as _os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.operators.maintenance import compact_blocks
-    from fourmc_spark.session import register_fourmc
-
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-compact-")
-    staged, out = f"{root}/staged", f"{root}/compact"
-    try:
-        _stage_events_4mz(spark, sf, staged, n_files=24)
-        total = sum(
-            _os.path.getsize(p)
-            for p in _glob.glob(f"{staged}/part-*.4mz")
-        )
-        compact_blocks(spark, staged, out, target_bytes=max(1, total // 3))
-        back = (
-            spark.read.format("fourmc").load(out)
-            .select(F.from_json("value", _EV_JSON_SCHEMA).alias("_r"))
-            .select("_r.*")
-        )
-        agg = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(agg)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # events land as JSON lines in 24 small sealed .4mz files (the
+    # streaming sink's long-run accumulation shape), compact_blocks
+    # raw-copies their blocks into ~3 large sealed containers (no
+    # recompression — block payloads move verbatim, only header/EOS/footer
+    # are rewritten; one Spark task per output, planned from footer-only
+    # preads), and the aggregate over the COMPACTED tree must equal the
+    # batch oracle over the original events exactly — a block dropped,
+    # reordered across a bin boundary, or a glued line at an unterminated
+    # file seam breaks the hash. Structural pins (output count, block
+    # arithmetic, CLI seal verification) live in tests/test_maintenance.py.
+    with _scratch(spark) as root:
+        _stage_events_4mz(spark, sf, f"{root}/staged", n_files=24)
+        out = _compact(spark, f"{root}/staged", f"{root}/compact", parts=3)
+        back = _parsed(spark.read.format("fourmc").load(out), _EV_TS_DDL)
+        return _detach(_summary(back))
 
 
-@query(
-    "stream_4mc_ordered_multibatch",
-    """SELECT date_trunc('hour', ts) AS win_start, event_type,
-              CAST(count(*) AS BIGINT) AS cnt, round(sum(value), 2) AS sum_value
-       FROM {EV} GROUP BY 1, 2 ORDER BY 1, 2""",
-)
+@query("stream_4mc_ordered_multibatch", _TUMBLING_ORACLE)
 def stream_4mc_ordered_multibatch_q(spark, sf):
     # The orderednames O(1) offset mode under the hash gate, fed by its
     # qualifying producer: a PRODUCER streaming pipeline (4mc stream
@@ -5859,18 +5063,13 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
     # batch boundary breaks the hash.
     import glob as _glob
     import os as _os
-    import shutil
-    import tempfile
     import uuid as _uuid
 
-    from fourmc_spark.session import register_fourmc
     from fourmc_spark.streaming import tumbling_counts
 
-    register_fourmc(spark)
-    root = tempfile.mkdtemp(prefix="fourmc-stream-omb-")
-    staged, live_in = f"{root}/staged", f"{root}/in"
-    sink_out, ckpt = f"{root}/out", f"{root}/ckpt"
-    try:
+    with _scratch(spark) as root:
+        staged, live_in = f"{root}/staged", f"{root}/in"
+        sink_out, ckpt = f"{root}/out", f"{root}/ckpt"
         _stage_events_4mz(spark, sf, staged, n_files=4)
         files = sorted(_glob.glob(f"{staged}/part-*.4mz"))
         _os.makedirs(live_in)
@@ -5893,8 +5092,7 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
         )
         prod = (
             psrc.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "fast")
-            .option("partitionby", "bucket")
+            .options(codec="zstd", level="fast", partitionby="bucket")
             .option("path", sink_out)
             .option("checkpointLocation", ckpt)
             .start()
@@ -5925,21 +5123,10 @@ def stream_4mc_ordered_multibatch_q(spark, sf):
                 cons.awaitTermination()
             prod.stop()
             prod.awaitTermination()
-        out = spark.table(name).orderBy("win_start", "event_type")
-        return _detach(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _detach(spark.table(name).orderBy("win_start", "event_type"))
 
 
-@query(
-    "stream_4mc_sink",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM {EV} GROUP BY event_type ORDER BY event_type""",
-)
+@query("stream_4mc_sink", _summary_oracle())
 def stream_4mc_sink_q(spark, sf):
     # The 4mc STREAMING SINK inside the oracle gate (round-8 stretch;
     # sink twin of stream_4mc_tumbling's source certification): events
@@ -5954,225 +5141,43 @@ def stream_4mc_sink_q(spark, sf):
     # stream->batch round trip. The CLI leg
     # (tests/test_reference_cli_compat.py::test_reference_cli_verifies_stream_sink_files)
     # additionally verifies the sealed files with the reference's
-    # prebuilt binary. Scale shape: one sealed file per task per
-    # micro-batch, no driver data path; ts stays out of the payload
-    # (the aggregate doesn't need it), so no timezone rendering.
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.streaming import read_events_stream
-
-    register_fourmc(spark)
-    d = tempfile.mkdtemp(prefix="fourmc-stream-sink-")
-    out_dir, ckpt = f"{d}/out", f"{d}/ckpt"
-    try:
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("value")
-        )
-        q = (
-            sdf.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        back = (
-            spark.read.format("fourmc").load(out_dir)
-            .select(
-                F.from_json(
-                    "value",
-                    "event_id BIGINT, user_id BIGINT, event_type STRING, "
-                    "value DOUBLE",
-                ).alias("_r")
-            )
-            .select("_r.*")
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # prebuilt binary. ts stays out of the payload (the aggregate doesn't
+    # need it), so no timezone rendering.
+    with _scratch(spark) as root:
+        out = _streamed(spark, sf, _NDJSON, root)
+        back = _parsed(spark.read.format("fourmc").load(out), _EV_DDL)
+        return _detach(_summary(back))
 
 
-@query(
-    "stream_4mc_sinkstats_scan",
-    """SELECT event_type, CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum(user_id) AS BIGINT) AS user_sum,
-              round(sum(value), 2) AS value_sum,
-              CAST(min(event_id) AS BIGINT) AS min_event,
-              CAST(max(event_id) AS BIGINT) AS max_event
-       FROM events WHERE event_id BETWEEN 600 AND 2399
-       GROUP BY event_type ORDER BY event_type""",
-)
-def stream_4mc_sinkstats_scan_q(spark, sf):
-    # Write-time zone maps on the STREAMING sink (round 10): the
-    # statsschema sidecars ride the stream commit's deterministic
-    # renames (sources/stream.py), so a live stream's output prunes
-    # range queries IMMEDIATELY — no ANALYZE pass between ingest and
-    # query. Twin of stream_4mc_sink plus the sql_4mc_sinkstats_scan
-    # poison proof: events stream through writeStream.format("fourmc")
-    # with .option("statsschema", ddl), then a garbage file with a
-    # valid out-of-range sidecar is planted and the typed scan's range
-    # query must both hash-match the batch oracle (stream-computed
-    # stats too narrow would prune real rows) and survive the poison
-    # (pruning engaged before any footer read). Each micro-batch task
-    # seals its own sidecar executor-side — at 100 TB of daily ingest
-    # the stats tier costs one Arrow parse per written batch, no
-    # second pass over the data, and the driver never sees a row.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
+# Write-time zone maps on the STREAMING sink (round 10): the statsschema
+# sidecars ride the stream commit's deterministic renames
+# (sources/stream.py), so a live stream's output prunes range queries
+# IMMEDIATELY — no ANALYZE pass between ingest and query. Twin of
+# stream_4mc_sink plus the sql_4mc_sinkstats_scan poison proof: the typed
+# scan's range query must both hash-match the batch oracle
+# (stream-computed stats too narrow would prune real rows) and survive
+# the poison (pruning engaged before any footer read). Each micro-batch
+# task seals its own sidecar executor-side — at 100 TB of daily ingest
+# the stats tier costs one Arrow parse per written batch, no second pass
+# over the data, and the driver never sees a row.
+_case("stream_4mc_sinkstats_scan", _ranged("event_id BETWEEN 600 AND 2399"),
+      model=_NDJSON, fixture=_streamed, poison=_ID_ZONE,
+      statsschema=_EV_DDL)
 
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX
-    from fourmc_spark.streaming import read_events_stream
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    d = tempfile.mkdtemp(prefix="fourmc-stream-sinkstats-")
-    out_dir, ckpt = f"{d}/out", f"{d}/ckpt"
-    try:
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("value")
-        )
-        q = (
-            sdf.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("statsschema", ddl)
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        poison = os.path.join(out_dir, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "rows": 1,
-                    "columns": {
-                        "event_id": {
-                            "min": 10**9, "max": 2 * 10**9, "nulls": 0
-                        }
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out_dir)
-            .where(F.col("event_id").between(600, 2399))
-        )
-        out = (
-            back.groupBy("event_type")
-            .agg(
-                F.count("*").cast("long").alias("cnt"),
-                F.sum("user_id").cast("long").alias("user_sum"),
-                F.round(F.sum("value"), 2).alias("value_sum"),
-                F.min("event_id").cast("long").alias("min_event"),
-                F.max("event_id").cast("long").alias("max_event"),
-            )
-            .orderBy("event_type")
-        )
-        return _detach(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-@query(
-    "stream_4mc_bloomsink_scan",
-    """SELECT CAST(event_id AS BIGINT) AS event_id,
-              CAST(user_id AS BIGINT) AS user_id,
-              event_type, value
-       FROM events WHERE event_id IN (7, 133, 501, 952)
-       ORDER BY event_id""",
-)
-def stream_4mc_bloomsink_scan_q(spark, sf):
-    # Write-time BLOOMS on the STREAMING sink (round 10): with
-    # .option("bloomcolumns", "event_id") riding statsschema, every
-    # sealed micro-batch file carries a bloom bitmap built from the
-    # exact distinct values it received (Arrow-dedup per batch, XXH64
-    # under the shared contract) — a live sealed log answers POINT
-    # lookups immediately, no ANALYZE job ever. The poison proof is the
-    # all-zero-bloom garbage file; the batch oracle proves the
-    # stream-computed bitmaps lost no value (a dropped bit would prune
-    # a real row and break the hash). Combined with the statsschema
-    # zone tier and compaction's OR-merge carry, the steady-state
-    # pipeline prunes ranges AND point probes from ingest onward.
-    import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from fourmc_spark.session import register_fourmc
-    from fourmc_spark.format.sidecar import STATS_SUFFIX, seal_bloom_spec
-    from fourmc_spark.streaming import read_events_stream
-
-    register_fourmc(spark)
-    ddl = "event_id bigint, user_id bigint, event_type string, value double"
-    bits, k = 1 << 18, 6
-    d = tempfile.mkdtemp(prefix="fourmc-stream-bloomsink-")
-    out_dir, ckpt = f"{d}/out", f"{d}/ckpt"
-    try:
-        sdf = read_events_stream(spark, f"{sf}/events.parquet").select(
-            F.to_json(
-                F.struct("event_id", "user_id", "event_type", "value")
-            ).alias("value")
-        )
-        q = (
-            sdf.writeStream.format("fourmc")
-            .option("codec", "zstd").option("level", "medium")
-            .option("statsschema", ddl)
-            .option("bloomcolumns", "event_id")
-            .option("bloombits", str(bits)).option("bloomk", str(k))
-            .option("path", out_dir).option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        poison = os.path.join(out_dir, "poison.4mz")
-        with open(poison, "wb") as f:
-            f.write(b"NOT-A-4MC-CONTAINER" * 16)
-        with open(poison + STATS_SUFFIX, "w") as f:
-            _json.dump(
-                {
-                    "version": 2,
-                    "size": os.path.getsize(poison),
-                    "bloom": {
-                        # all-zero bitmap: every probe provably absent
-                        "event_id": seal_bloom_spec(
-                            bytes(bits // 8), bits, k, "int"
-                        ),
-                    },
-                },
-                f,
-            )
-        back = (
-            spark.read.format("fourmc")
-            .option("jsonschema", ddl).load(out_dir)
-            .where(F.col("event_id").isin([7, 133, 501, 952]))
-            .select("event_id", "user_id", "event_type", "value")
-            .orderBy("event_id")
-        )
-        return _detach(back)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+# Write-time BLOOMS on the STREAMING sink (round 10): with bloomcolumns
+# riding statsschema, every sealed micro-batch file carries a bloom
+# bitmap built from the exact distinct values it received (Arrow-dedup
+# per batch, XXH64 under the shared contract) — a live sealed log answers
+# POINT lookups immediately, no ANALYZE job ever. The poison proof is the
+# all-zero-bloom garbage file; the batch oracle proves the
+# stream-computed bitmaps lost no value (a dropped bit would prune a real
+# row and break the hash). Combined with the statsschema zone tier and
+# compaction's OR-merge carry, the steady-state pipeline prunes ranges
+# AND point probes from ingest onward.
+_case("stream_4mc_bloomsink_scan", _lookup(7, 133, 501, 952),
+      model=_NDJSON, fixture=_streamed, poison=_ID_BLOOM,
+      statsschema=_EV_DDL, bloomcolumns="event_id",
+      bloombits=_BLOOM_BITS, bloomk=_BLOOM_K)
 
 
 _PROFILE_COLS = ["doc_id", "lang", "n_chars", "source", "text"]

@@ -6,7 +6,12 @@ partitions through HashPartitioning, so silent hash drift against a
 future Spark would quietly degrade fixture layout — and (b) actually
 produce the range-disjoint n-partition layout the zone-map demos rely
 on. Results are layout-invariant either way (oracle-pinned); these
-tests keep the LAYOUT claim honest."""
+tests keep the LAYOUT claim honest.
+
+The lifecycle harness's own proofs are pinned here too: the compaction
+step refuses a carry that dropped sidecars, and a planted poison file is
+skipped only by pruning, so every lifecycle query that plants one
+proves its pruning tier inside the gate."""
 
 import pytest
 
@@ -135,3 +140,80 @@ def test_range_partition_fixture_falls_back_without_stats(spark, tmp_path):
         df, 4, "k", str(tmp_path / "does-not-exist.parquet")
     )
     assert out.count() == 100
+
+
+def _fake_compaction(monkeypatch, outputs, carried):
+    from fourmc_spark.operators import maintenance
+
+    monkeypatch.setattr(
+        maintenance, "compact_blocks",
+        lambda *a, **k: {"outputs": outputs, "stats_carried": carried},
+    )
+
+
+def test_compact_raises_when_a_sealed_output_is_uncarried(
+    tmp_path, monkeypatch
+):
+    """An explicit raise, not an assert: under ``python -O`` the check
+    must still fail a compaction that dropped a carried sidecar."""
+    from fourmc_spark.format.sidecar import path_for
+    from fourmc_spark.queries import _compact
+
+    src, out = tmp_path / "staged", str(tmp_path / "compact")
+    src.mkdir()
+    for i in range(3):
+        part = src / f"part-{i}.4mz"
+        part.write_bytes(b"x" * 64)
+        open(path_for(str(part)), "w").write("{}")
+    _fake_compaction(monkeypatch, outputs=2, carried=1)
+    with pytest.raises(RuntimeError, match="sidecars"):
+        _compact(None, str(src), out, parts=2)
+    _fake_compaction(monkeypatch, outputs=2, carried=2)
+    assert _compact(None, str(src), out, parts=2) == out
+
+
+def test_compact_of_unsealed_inputs_needs_no_carry(tmp_path, monkeypatch):
+    from fourmc_spark.queries import _compact
+
+    src = tmp_path / "staged"
+    src.mkdir()
+    (src / "part-0.4mz").write_bytes(b"x" * 64)
+    _fake_compaction(monkeypatch, outputs=1, carried=0)
+    out = str(tmp_path / "compact")
+    assert _compact(None, str(src), out, parts=3) == out
+
+
+@pytest.mark.parametrize("poison, pruned, keep, unprunable", [
+    ({"zone": {"event_id": {"min": 10**9, "max": 2 * 10**9, "nulls": 0}}},
+     "event_id BETWEEN 10 AND 30", lambda i: 10 <= i <= 30,
+     "event_id >= 1500000000"),
+    ({"bloom": ["event_id"]},
+     "event_id IN (3, 17, 29)", lambda i: i in (3, 17, 29),
+     "event_id > 0"),
+], ids=["zone", "bloom"])
+def test_poison_is_skipped_only_by_pruning(
+    spark, tmp_path, poison, pruned, keep, unprunable
+):
+    """The poison is unreadable and sits where the read looks: a read
+    whose predicate its sidecar cannot exclude raises, and the pruning
+    read returns exactly the real rows."""
+    from fourmc_spark.queries import _EV_DDL, _NDJSON, _plant_poison, _write
+
+    rows = [(i, i % 7, ("click", "view")[i % 2], i / 4) for i in range(1, 41)]
+    d = str(tmp_path / "tree")
+    _write(
+        _NDJSON.encode(spark.createDataFrame(rows, _EV_DDL).repartition(2)), d
+    )
+    _plant_poison(d, **poison)
+
+    def read(where):
+        # a fresh relation per read: one pushed filter per relation
+        return (
+            spark.read.format("fourmc").option("jsonschema", _EV_DDL)
+            .load(d).where(where)
+        )
+
+    got = [tuple(r) for r in read(pruned).orderBy("event_id").collect()]
+    assert got == [r for r in rows if keep(r[0])]
+    with pytest.raises(Exception, match="(?i)header|magic"):
+        read(unprunable).collect()
